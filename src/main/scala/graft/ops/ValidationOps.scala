@@ -7,24 +7,17 @@ import org.apache.spark.sql.functions._
 /** Data-quality validation aggregates (SURVEY.md §2d A-1..A-5, §2e W-7/W-8;
   * reference `src/pipeline.py:44-76` `validate`).
   *
-  * Scale design: the per-column null counts, violation counts and pooled
-  * moment statistics FUSE into a single full-scan `agg(...)` — one pass,
-  * map-side partial aggregation, one tiny reduced row to the driver. The
-  * reference makes ~5 separate pandas passes; at 100 TB each extra pass is
-  * a full re-read, so fusion is the difference between 1× and 5× scan cost.
+  * Scale design: the reference makes one pandas pass per check; at 100 TB
+  * each extra pass is a full re-read. [[basicChecks]] answers the whole
+  * basic-check report in THREE actions, each a fused scan with map-side
+  * partial aggregation and a tiny reduced result: the raw
+  * slice's null and duplicate-key counts, the cleaned slice's violation
+  * counts and pooled moments, then the extreme-move and missing-day counts
+  * as two branches of one query.
   */
 object ValidationOps {
 
   private def cnt(c: Column): Column = sum(c.cast("long"))
-
-  /** A-1: per-column null counts in one pass (`df.isna().sum()`,
-    * reference `src/pipeline.py:48`).
-    */
-  def nullCounts(df: DataFrame): Map[String, Long] = {
-    val aggs = df.columns.map(c => cnt(col(c).isNull).as(c))
-    val row = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
-    df.columns.map(c => c -> row.getAs[Long](c)).toMap
-  }
 
   /** A-2: rows participating in duplicate key groups (pandas
     * `duplicated(keep=False).sum()`, reference `src/pipeline.py:51-52` —
@@ -37,38 +30,81 @@ object ValidationOps {
     r.getAs[Long]("dups")
   }
 
-  /** Basic-check report: one fused scan computing null totals, violation
-    * counts (A-3: close<=0, volume<0) and the pooled return moments (A-4)
-    * needed by the z-score. pandas `std` is sample stddev (ddof=1) →
-    * `stddev_samp`.
+  /** The basic-check report of one request (reference `validate`,
+    * `src/pipeline.py:44-76`). `nullCounts` and `duplicateRows` describe
+    * the RAW slice; the rest describe the cleaned (deduplicated) one.
+    * `retMean`/`retStd` are the pooled moments of the per-entity simple
+    * return (pandas `std` is sample stddev, ddof=1 → `stddev_samp`).
     */
-  final case class BasicStats(
+  final case class BasicChecks(
+      nullCounts: Seq[(String, Long)],
+      duplicateRows: Long,
       rows: Long,
-      nullCells: Long,
       nonPositiveClose: Long,
       negativeVolume: Long,
       retMean: Option[Double],
-      retStd: Option[Double])
+      retStd: Option[Double],
+      extremeMoves: Long,
+      missingBusinessDays: Seq[(String, Long)])
 
-  def basicStats(df: DataFrame, close: String = "close", volume: String = "volume",
-      ret: String = "ret"): BasicStats = {
-    val nullCells = df.columns.map(c => col(c).isNull.cast("long")).reduce(_ + _)
-    val row = df.agg(
+  /** A-1..A-4, W-7, W-8 in three actions:
+    *  1. one aggregate over `raw`: per-(entity, time) group counts carrying
+    *     per-column null sums, reduced to the null counts (A-1) and the
+    *     rows in duplicate key groups (A-2);
+    *  2. one aggregate over `clean` plus its per-entity return: row count,
+    *     close<=0 / volume<0 violations (A-3) and the pooled return
+    *     moments (A-4). Pass `clean` persisted, so actions 2 and 3 and
+    *     the caller's own stages share one materialization;
+    *  3. the pooled z-score outlier count (W-7) with the moments of action
+    *     2 as literals — no cross join — unioned with the per-entity
+    *     missing-business-day count (W-8), so both independent branches
+    *     run as the stages of ONE query, scheduled side by side.
+    */
+  def basicChecks(raw: DataFrame, clean: DataFrame, entity: String = "ticker",
+      time: String = "date", close: String = "close", volume: String = "volume",
+      zThreshold: Double = 6.0): BasicChecks = {
+    val nullSums = raw.columns.indices.map(i => s"_null$i")
+    val perKey = raw.groupBy(col(entity), col(time)).agg(
+      count(lit(1)).as("_n"),
+      raw.columns.zip(nullSums).map { case (c, a) => cnt(col(c).isNull).as(a) }: _*)
+    val r1 = perKey.agg(
+      coalesce(sum(when(col("_n") > 1, col("_n"))), lit(0L)).as("_dups"),
+      nullSums.map(a => coalesce(sum(col(a)), lit(0L)).as(a)): _*).head()
+    val nulls = raw.columns.toSeq.zip(nullSums).map { case (c, a) => c -> r1.getAs[Long](a) }
+
+    val ret = ColNames.fresh(clean.columns.toSet, "_ret")
+    val withRet = clean.withColumn(ret, FeatureOps.pctChange(entity, time, close))
+    val r2 = withRet.agg(
       count(lit(1)).as("rows"),
-      sum(nullCells).as("null_cells"),
-      cnt(col(close) <= 0).as("bad_close"),
-      cnt(col(volume) < 0).as("bad_volume"),
+      coalesce(cnt(col(close) <= 0), lit(0L)).as("bad_close"),
+      coalesce(cnt(col(volume) < 0), lit(0L)).as("bad_volume"),
       avg(col(ret)).as("ret_mean"),
       stddev_samp(col(ret)).as("ret_std")).head()
-    BasicStats(
-      row.getAs[Long]("rows"),
-      Option(row.getAs[Any]("null_cells")).fold(0L)(_.asInstanceOf[Long]),
-      row.getAs[Long]("bad_close"),
-      row.getAs[Long]("bad_volume"),
-      // getAs[Any] first: getAs[Double] would unbox a SQL NULL to 0.0
-      // before Option could see it (empty/all-null ret -> Some(0.0))
-      Option(row.getAs[Any]("ret_mean")).map(_.asInstanceOf[Double]),
-      Option(row.getAs[Any]("ret_std")).map(_.asInstanceOf[Double]))
+    // getAs[Any] first: getAs[Double] would unbox a SQL NULL to 0.0
+    // before Option could see it (empty/all-null ret -> Some(0.0))
+    val retMean = Option(r2.getAs[Any]("ret_mean")).map(_.asInstanceOf[Double])
+    val retStd = Option(r2.getAs[Any]("ret_std")).map(_.asInstanceOf[Double])
+
+    def moment(m: Option[Double]): Column = m.fold(lit(null).cast("double"))(lit(_))
+    val missing = missingBusinessDays(clean, entity, time)
+    val extremes = withRet
+      .agg(cnt(abs((col(ret) - moment(retMean)) / moment(retStd)) > zThreshold).as("_k"))
+      .select(lit(null).cast(missing.schema(entity).dataType).as(entity),
+        coalesce(col("_k"), lit(0L)).as("_k"), lit(true).as("_extreme"))
+    val r3 = extremes.unionByName(missing.select(col(entity),
+      col("missing_bdays").as("_k"), lit(false).as("_extreme"))).collect()
+
+    BasicChecks(
+      nullCounts = nulls,
+      duplicateRows = r1.getAs[Long]("_dups"),
+      rows = r2.getAs[Long]("rows"),
+      nonPositiveClose = r2.getAs[Long]("bad_close"),
+      negativeVolume = r2.getAs[Long]("bad_volume"),
+      retMean = retMean,
+      retStd = retStd,
+      extremeMoves = r3.filter(_.getBoolean(2)).map(_.getLong(1)).sum,
+      missingBusinessDays = r3.filterNot(_.getBoolean(2))
+        .map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1))
   }
 
   /** W-7: pooled z-score outlier flag (reference `src/pipeline.py:62-63`).
@@ -83,11 +119,6 @@ object ValidationOps {
     df.crossJoin(broadcast(moments))
       .withColumn(zCol, (col(ret) - col("_mu")) / col("_sigma"))
       .drop("_mu", "_sigma")
-  }
-
-  def extremeMoveCount(df: DataFrame, ret: String = "ret", zThreshold: Double = 6.0): Long = {
-    val z = withZScore(df, ret)
-    z.agg(cnt(abs(col("z")) > zThreshold).as("n")).head().getAs[Long]("n")
   }
 
   /** W-8: per-entity missing-business-day estimate (reference

@@ -2,6 +2,7 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Parquet-backed warehouse with the reference's dedup/upsert write
   * semantics (SURVEY.md §2h K-2..K-5, §2c J-3; reference
@@ -25,28 +26,23 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   def read(table: String): DataFrame = spark.read.parquet(path(table))
 
-  /** Read with partition-column type inference DISABLED, so hive
-    * directory names come back as their lossless string form. Inference
-    * would retype e.g. a string key "01" as int 1 — and then the
-    * anti-join would compare coerced values and silently re-append
-    * duplicates (or falsely dedup distinct keys), breaking the
-    * idempotency contract. The conf only matters while the relation is
-    * resolved, so it is restored immediately.
+  /** Read `schema`'s columns of `table` with the partition columns typed
+    * as STRING, so hive directory names come back in their lossless
+    * string form. Type inference would retype e.g. a string key "01" as
+    * int 1 — and then the anti-join would compare coerced values and
+    * silently re-append duplicates (or falsely dedup distinct keys),
+    * breaking the idempotency contract. The schema is supplied per read:
+    * flipping the session's inference conf instead would race with (and
+    * could permanently alter) every other query on the session. Every
+    * field reads as nullable, since stored rows may hold nulls that the
+    * caller's schema rules out.
     */
-  private def readPartitionsAsString(table: String): DataFrame = {
-    // NOTE: toggling a session conf is safe under this warehouse's
-    // single-writer contract (one runner per SparkSession — plain parquet
-    // has no concurrent-writer story anyway; Delta is the multi-writer
-    // path). The window is confined to relation resolution below.
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try {
-      val df = spark.read.parquet(path(table))
-      df.schema // force resolution while inference is off
-      df
-    } finally spark.conf.set(key, prev)
-  }
+  private def readPartitionsAsString(table: String, partitionCols: Seq[String],
+      schema: StructType): DataFrame =
+    spark.read.schema(StructType(schema.map { f =>
+      f.copy(dataType = if (partitionCols.contains(f.name)) StringType else f.dataType,
+        nullable = true)
+    })).parquet(path(table))
 
   /** Fail fast when a partitioned write would land on a table whose
     * existing layout does not match: appending `ticker=X/` dirs beside
@@ -161,10 +157,12 @@ final class Warehouse(spark: SparkSession, root: String) {
     requireLayout(table, partitionCols)
     val inBatch = batch.dropDuplicates(keys)
     // one tiny agg on the batch -> the touched-partition list; collected
-    // up front so the empty-string guard also covers the FIRST write
+    // up front so the empty-string guard also covers the FIRST write.
+    // The partition columns are part of the key, so the batch touches
+    // the same partitions before and after the in-batch dedup.
     val touched =
       if (partitionCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else inBatch.select(partitionCols.map(col): _*).distinct().collect()
+      else batch.select(partitionCols.map(col): _*).distinct().collect()
     requireNoEmptyPartitionValues(partitionCols, touched)
     val fresh =
       if (!exists(table)) inBatch
@@ -177,8 +175,11 @@ final class Warehouse(spark: SparkSession, root: String) {
         // reaches PartitionFilters — then cast back to the batch's types
         // ABOVE the filter so the anti-join compares like-typed keys.
         // Null-safe equality so null partition values
-        // (__HIVE_DEFAULT_PARTITION__) still dedup correctly.
-        val existing = readPartitionsAsString(table)
+        // (__HIVE_DEFAULT_PARTITION__) still dedup correctly. Only the
+        // keys are read, typed as in the batch, so no pass over the
+        // table's files infers a schema first.
+        val existing = readPartitionsAsString(table, partitionCols,
+          StructType(keys.map(batch.schema(_))))
         val filters = touched.map { row =>
           partitionCols.zipWithIndex
             .map { case (c, i) => col(c) <=> lit(row.get(i)).cast("string") }
@@ -196,14 +197,15 @@ final class Warehouse(spark: SparkSession, root: String) {
     // parquet append writes new files so the source files stay stable, but
     // we cache+count to fix the saved-row tally exactly once.
     val staged = fresh.cache()
-    val n = staged.count()
-    if (n > 0) {
-      val w = staged.write.mode("append")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(path(table))
-    }
-    staged.unpersist()
-    n
+    try {
+      val n = staged.count()
+      if (n > 0) {
+        val w = staged.write.mode("append")
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(path(table))
+      }
+      n
+    } finally staged.unpersist()
   }
 
   /** K-4: last-writer-wins upsert keyed on `idCols` (reference INSERT OR
@@ -263,7 +265,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     val merged =
       if (!exists(table)) batch
       else {
-        val existing = readPartitionsAsString(table)
+        val existing = readPartitionsAsString(table, partitionCols, read(table).schema)
         val filters = touched.map { row =>
           partitionCols.zipWithIndex
             .map { case (c, i) => col(c) <=> lit(row.get(i)).cast("string") }
@@ -287,11 +289,11 @@ final class Warehouse(spark: SparkSession, root: String) {
     // (retryable) rather than silently re-reading a half-deleted table.
     val (staged, releaseStaged) =
       graft.internal.Checkpoints.localCheckpointTracked(merged)
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try staged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path(table))
+    // dynamic overwrite as a write OPTION: it takes precedence over the
+    // session conf for this write only, so concurrent writers never see it
+    try staged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path(table))
     finally {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
       // a long-lived session looping upserts must not accumulate a
       // stage copy per call; the handle frees exactly this checkpoint's
       // blocks (Dataset.unpersist is a no-op on checkpointed frames)
@@ -361,7 +363,8 @@ final class Warehouse(spark: SparkSession, root: String) {
       partitionCols: Seq[String] = Seq.empty): Unit = {
     requireLayout(table, partitionCols)
     val df =
-      if (partitionCols.isEmpty) read(table) else readPartitionsAsString(table)
+      if (partitionCols.isEmpty) read(table)
+      else readPartitionsAsString(table, partitionCols, read(table).schema)
     val nParts =
       if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions

@@ -8,11 +8,29 @@ class ValidationOpsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  test("nullCounts counts nulls per column in one pass") {
-    val df = Seq(
-      (Some(1), Some("a")), (None, Some("b")), (Some(3), None), (None, None)
-    ).toDF("x", "y")
-    assert(ValidationOps.nullCounts(df) === Map("x" -> 2L, "y" -> 2L))
+  /** (ticker, day-of-January, close, volume) rows as a raw price slice. */
+  private def slice(rows: (String, Int, Option[Double], Option[Long])*) =
+    rows.toDF("ticker", "day", "close", "volume")
+      .selectExpr("ticker", "make_date(2024, 1, day) AS date", "close", "volume")
+
+  /** The fused report over `raw`, cleaned the way the runner cleans it. */
+  private def checks(raw: org.apache.spark.sql.DataFrame) =
+    ValidationOps.basicChecks(raw, raw.dropDuplicates("ticker", "date"))
+
+  test("basicChecks counts nulls per column of the raw slice in one pass") {
+    val raw = slice(("A", 1, Some(1.0), Some(10L)), ("A", 2, None, Some(20L)),
+      ("A", 3, Some(3.0), None), ("A", 4, None, None))
+    assert(checks(raw).nullCounts ===
+      Seq("ticker" -> 0L, "date" -> 0L, "close" -> 2L, "volume" -> 2L))
+  }
+
+  test("basicChecks counts EVERY member of a duplicate key group on the raw slice") {
+    val raw = slice(("A", 1, Some(1.0), Some(1L)), ("A", 1, Some(1.0), Some(1L)),
+      ("A", 1, Some(2.0), Some(1L)), ("B", 1, Some(1.0), Some(1L)),
+      ("B", 1, Some(1.0), Some(1L)), ("C", 1, Some(1.0), Some(1L)))
+    val c = checks(raw)
+    assert(c.duplicateRows === 5L)
+    assert(c.rows === 3L) // the cleaned slice keeps one row per key
   }
 
   test("duplicateRowCount counts EVERY member of a duplicate group (pandas keep=False)") {
@@ -29,20 +47,16 @@ class ValidationOpsSpec extends AnyFunSuite {
     assert(ValidationOps.duplicateRowCount(df, Seq("ticker", "date")) === 0L)
   }
 
-  test("basicStats fuses counts and pooled sample moments") {
-    val df = Seq(
-      (10.0, 5L, Some(0.1)),
-      (-1.0, -2L, Some(0.3)),
-      (3.0, 0L, None)
-    ).toDF("close", "volume", "ret")
-    val s = ValidationOps.basicStats(df)
-    assert(s.rows === 3L)
-    assert(s.nonPositiveClose === 1L)
-    assert(s.negativeVolume === 1L)
-    assert(s.nullCells === 1L)
-    assert(math.abs(s.retMean.get - 0.2) < 1e-12)
+  test("basicChecks fuses violation counts and pooled return moments") {
+    // A's returns are 0.1 and 0.3; B's single row has none
+    val c = checks(slice(("A", 1, Some(10.0), Some(5L)), ("A", 2, Some(11.0), Some(0L)),
+      ("A", 3, Some(14.3), Some(7L)), ("B", 1, Some(-1.0), Some(-2L))))
+    assert(c.rows === 4L)
+    assert(c.nonPositiveClose === 1L)
+    assert(c.negativeVolume === 1L)
+    assert(math.abs(c.retMean.get - 0.2) < 1e-12)
     // sample stddev of {0.1, 0.3} = sqrt(0.02) ≈ 0.14142…
-    assert(math.abs(s.retStd.get - math.sqrt(0.02)) < 1e-12)
+    assert(math.abs(c.retStd.get - math.sqrt(0.02)) < 1e-12)
   }
 
   test("withZScore standardizes against POOLED mean/std, not per-entity") {
@@ -67,10 +81,19 @@ class ValidationOpsSpec extends AnyFunSuite {
     assert(out.toSeq === Seq(("A", 3L))) // B has a complete span → absent
   }
 
-  test("extremeMoveCount flags |z| above threshold") {
-    val df = (Seq.fill(99)(0.01) :+ 10.0).zipWithIndex
-      .map { case (r, i) => (s"T$i", r) }.toDF("ticker", "ret")
-    assert(ValidationOps.extremeMoveCount(df, "ret", 6.0) === 1L)
+  test("basicChecks flags |z| above threshold and counts missing business days") {
+    // 99 returns of 1%, then one of +1000%; A skips Tue 2024-01-02
+    val closes = (1 to 99).scanLeft(100.0)((c, _) => c * 1.01)
+    val a = (closes :+ closes.last * 11).zipWithIndex.map { case (c, i) =>
+      ("A", java.time.LocalDate.of(2024, 1, 1).plusDays(i + (if (i >= 1) 1 else 0)).toString, c)
+    }
+    val raw = a.toDF("ticker", "d", "close")
+      .selectExpr("ticker", "CAST(d AS DATE) AS date", "close", "1L AS volume")
+    val c = checks(raw)
+    assert(c.extremeMoves === 1L)
+    assert(c.missingBusinessDays === ValidationOps.missingBusinessDays(raw)
+      .as[(String, Long)].collect().toSeq)
+    assert(c.missingBusinessDays.head === ("A" -> 1L))
   }
 
   test("madOutliers: hand-checked median/MAD; spike counted, mean-robust") {

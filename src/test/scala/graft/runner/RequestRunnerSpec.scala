@@ -1,7 +1,13 @@
 package graft.runner
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.time.Instant
+import java.time.{Instant, LocalDate}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -40,6 +46,74 @@ class RequestRunnerSpec extends AnyFunSuite {
     ("GS10", "2024-01-01", None: Option[Double])
   ).toDF("series_id", "d", "value")
     .selectExpr("series_id", "CAST(d AS DATE) AS date", "value")
+
+  // Equivalence fixture: two tickers over nine weeks with a duplicate key
+  // (keep-last must win), a null volume, a non-positive close, one
+  // extreme move, a missing business day, a cross-source discrepancy and
+  // a macro frame with a null value and an uncatalogued series.
+  private val goldenDays: IndexedSeq[LocalDate] =
+    (0 until 63).map(LocalDate.of(2024, 1, 1).plusDays(_))
+      .filter(_.getDayOfWeek.getValue <= 5)
+
+  private val goldenPrimary = {
+    val aapl = goldenDays.zipWithIndex.flatMap { case (d, i) =>
+      val close = if (i == 20) 400.0 else 100.0 + 0.5 * (i % 7)
+      val row = ("AAPL", d.toString, close, Option(1000L + i))
+      if (i == 3) Seq(("AAPL", d.toString, 99.0, Option(5L)), row) else Seq(row)
+    }
+    val msft = goldenDays.zipWithIndex.collect { case (d, i) if i != 10 =>
+      val close = if (i == goldenDays.size - 1) -2.5 else 300.0 + 0.25 * (i % 5)
+      ("MSFT", d.toString, close, if (i == 15) None else Option(2000L + i))
+    }
+    (aapl ++ msft).toDF("ticker", "d", "close", "volume")
+      .selectExpr("ticker", "CAST(d AS DATE) AS date", "close", "volume")
+  }
+
+  private val goldenSecondary = Seq(
+    ("AAPL", 0, 100.2), ("AAPL", 1, 100.4), ("AAPL", 2, 101.0),
+    ("AAPL", 3, 112.0), // 10% off the kept close: a discrepancy
+    ("MSFT", 0, 300.1), ("MSFT", 1, 300.2), ("MSFT", 10, 300.0))
+    .map { case (t, i, c) => (t, goldenDays(i).toString, c) }
+    .toDF("ticker", "d", "close")
+    .selectExpr("ticker", "CAST(d AS DATE) AS date", "close")
+
+  private val goldenMacro = Seq(
+    ("FEDFUNDS", "2024-01-01", Some(5.33)), ("FEDFUNDS", "2024-02-01", Some(5.33)),
+    ("GS10", "2024-01-01", None: Option[Double]), ("GS10", "2024-01-02", Some(4.1)),
+    ("CUSTOM1", "2024-01-01", Some(1.0)))
+    .toDF("series_id", "d", "value")
+    .selectExpr("series_id", "CAST(d AS DATE) AS date", "value")
+
+  private val goldenRequest = Request(Seq("MSFT", "AAPL"), "2024-01-01", "2024-03-01",
+    enableValidation = true, tolerancePct = 1.0, fetchMacro = true)
+
+  /** Every output of one run as named text, with the temp dir masked. */
+  private def snapshot(res: RunResult, base: String): Seq[(String, String)] = {
+    def text(p: String) = new String(Files.readAllBytes(Paths.get(p)), UTF_8).replace(base, "<base>")
+    def table(t: String) = {
+      val df = spark.read.parquet(s"$base/wh/$t")
+      val cols = df.columns.sorted
+      (cols.mkString("|") +: df.select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted).mkString("", "\n", "\n")
+    }
+    val outFiles = scala.util.Using.resource(Files.list(Paths.get(base, "out")))(
+      _.iterator().asScala.map(_.getFileName.toString).toSeq.sorted)
+    val anomalies = outFiles.find(_.startsWith("anomalies_")).get
+    Seq(
+      "run_result.txt" -> (res.toString.replace(base, "<base>") + "\n"),
+      "out_files.txt" -> outFiles.mkString("", "\n", "\n"),
+      "validation_report.json" -> text(res.reportPath),
+      "execution_log.json" -> text(res.logPath),
+      "prices.csv" -> text(res.csvPath.get),
+      "anomalies.csv" -> text(s"$base/out/$anomalies")) ++
+      Seq("market_data", "macro_data", "cross_validation", "request_log")
+        .map(t => s"$t.txt" -> table(t))
+  }
+
+  private def runGolden(): (RunResult, String) = {
+    val (r, base) = runner()
+    (r.run(goldenRequest, goldenPrimary, Some(goldenSecondary), Some(goldenMacro)), base)
+  }
 
   test("request id follows the reference contract") {
     val (r, _) = runner()
@@ -210,5 +284,55 @@ class RequestRunnerSpec extends AnyFunSuite {
     // append-only and id-deduped: same batch again adds nothing (fixed clock)
     r.writeValidationLog(rid, Seq(("AAPL", "null_check", "3 null values in close", 2.0)))
     assert(spark.read.parquet(s"$base/wh/validation_log").count() === 2L)
+  }
+
+  test("outputs match the serial lifecycle's byte for byte (golden_request)") {
+    // expected files: the same request through the serial, one-action-
+    // at-a-time runner this stage DAG replaced
+    val (res, base) = runGolden()
+    snapshot(res, base).foreach { case (name, actual) =>
+      val expected = new String(getClass.getResourceAsStream(
+        s"/graft/runner/golden_request/$name").readAllBytes(), UTF_8)
+      assert(actual === expected, s"$name differs")
+    }
+  }
+
+  test("action budget: one full request runs at most 20 SQL executions") {
+    // guards the fused validation and the read-once sources: a change
+    // that re-adds a pass over a source fails here before it slows
+    // the requests benchmark
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBusFlush(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      runGolden()
+      org.apache.spark.graftbridge.ListenerBusFlush(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(executions.get <= 20, s"${executions.get} SQL executions")
+  }
+
+  test("a failing branch fails the request only after every branch has finished") {
+    val (r, base) = runner()
+    // an unpartitioned macro_data: the macro branch's partitioned append
+    // must refuse it while the price branch is still running
+    macroDf.write.parquet(s"$base/wh/macro_data")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalArgumentException] {
+      r.run(Request(Seq("AAPL", "MSFT"), "2024-01-01", "2024-01-03",
+        enableValidation = true, tolerancePct = 1.0), primary, Some(secondary), Some(macroDf))
+    }
+    assert(e.getMessage.contains("'macro_data' was written UNPARTITIONED"), e.getMessage)
+    // one row: the terminal write replaced the concurrent "started" one
+    val log = spark.read.parquet(s"$base/wh/request_log")
+      .select("status", "error_count").as[(String, Long)].collect()
+    assert(log.toSeq === Seq(("failed", 1L)))
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted)
+    val alive = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith("graft-request-"))
+    assert(alive.isEmpty, alive)
   }
 }

@@ -126,6 +126,42 @@ class WarehouseSpec extends AnyFunSuite {
     assert(wh.read("iw").schema("suppkey").dataType === IntegerType)
   }
 
+  test("concurrent partitioned writes on two tables leave the session confs as they were") {
+    val keys = Seq("spark.sql.sources.partitionColumnTypeInference.enabled",
+      "spark.sql.sources.partitionOverwriteMode")
+    // effective value and whether the session sets it explicitly
+    def confs = keys.map(k => (spark.conf.get(k), spark.conf.getAll.get(k)))
+    val before = confs
+    val wh = freshWarehouse()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 3).foreach { i =>
+      val append = pool.submit(() => wh.dedupAppend("ca",
+        Seq(("01", s"2024-01-0$i", 1.0), ("1", "2024-01-01", 2.0))
+          .toDF("ticker", "date", "close"), Seq("ticker", "date"), Seq("ticker")))
+      val upsert = pool.submit { () =>
+        wh.upsert("cu", Seq((s"A_$i", "A", i.toDouble), ("B_1", "B", i.toDouble))
+          .toDF("validation_id", "ticker", "x"), Seq("validation_id", "ticker"), Seq("ticker"))
+        i
+      }
+      assert(append.get() === (if (i == 1) 2L else 1L))
+      upsert.get()
+    } finally pool.shutdown()
+    assert(confs === before)
+    assert(wh.read("cu").orderBy("validation_id").select("validation_id", "x")
+      .as[(String, Double)].collect().toSeq ===
+      Seq(("A_1", 1.0), ("A_2", 2.0), ("A_3", 3.0), ("B_1", 3.0)))
+  }
+
+  test("dedupAppend releases its staged cache when the write fails") {
+    val wh = freshWarehouse()
+    // parquet cannot store a calendar interval: the write fails after the
+    // staged frame was cached and counted
+    val bad = batch.selectExpr("*", "make_interval(0, 0, 0, 1, 0, 0, 0) AS iv")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](wh.dedupAppend("bad", bad, Seq("ticker", "date")))
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted)
+  }
+
   test("partitioned write onto an unpartitioned table fails fast (no mixed layout)") {
     val wh = freshWarehouse()
     wh.dedupAppend("mx", batch, Seq("ticker", "date")) // unpartitioned layout
