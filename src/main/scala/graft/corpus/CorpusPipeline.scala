@@ -2,6 +2,8 @@ package graft.corpus
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.functions.{DedupFunctions, SamplingFunctions, SimilarityFunctions, TextFunctions}
 import graft.warehouse.ShardWriter
@@ -841,16 +843,30 @@ object CorpusPipeline {
   }
 
   /** The committed [[TextIndex]] (all three stored tables). */
-  def readTextIndex(spark: SparkSession, stateDir: String): TextIndex = {
-    def tbl(name: String): DataFrame = {
+  def readTextIndex(spark: SparkSession, stateDir: String): TextIndex =
+    readTextIndex(spark, stateDir, idType = None)
+
+  /** [[readTextIndex]]; with `idType` given, the fingerprint, shingle
+    * and band tables read with the schemas [[buildTextIndex]] writes
+    * (ids of that type) instead of inferring each from a file footer,
+    * which costs one job per table. [[ingest]] passes its batch's id
+    * type, the type every batch it committed was written with.
+    */
+  private def readTextIndex(spark: SparkSession, stateDir: String,
+      idType: Option[DataType]): TextIndex = {
+    def tbl(name: String, fields: (String, DataType)*): DataFrame = {
       val dirs = committedDirs(spark, stateDir, name)
       require(dirs.nonEmpty, s"no committed $name batches under $stateDir")
-      spark.read.parquet(dirs: _*)
+      idType.fold(spark.read)(t => spark.read.schema(StructType(
+          (("id" -> t) +: fields).map { case (n, dt) => StructField(n, dt) })))
+        .parquet(dirs: _*)
     }
     // winnow rows exist only for containment-armed state — optional by
     // construction, like the SemanticIndex tables
     val wf = committedDirs(spark, stateDir, "index_wf")
-    TextIndex(tbl("index_fp"), tbl("index_sh"), tbl("index_bd"),
+    TextIndex(tbl("index_fp", "fp" -> StringType),
+      tbl("index_sh", "shingles" -> ArrayType(StringType)),
+      tbl("index_bd", "band" -> IntegerType, "bucket" -> LongType),
       winnow = if (wf.isEmpty) None else Some(spark.read.parquet(wf: _*)))
   }
 
@@ -1042,7 +1058,8 @@ object CorpusPipeline {
       if (committed.isEmpty)
         clean(docs, idCol, textCol, cfg, batchChunks, chunkIdCol, vecCol,
           semantic, holdout = holdout)
-      else appendBatchIndexed(readTextIndex(spark, stateDir), docs, idCol,
+      else appendBatchIndexed(
+        readTextIndex(spark, stateDir, Some(docs.schema(idCol).dataType)), docs, idCol,
         textCol, cfg,
         semanticIndex = semantic.flatMap(_ => readSemanticIndex(spark, stateDir)),
         batchChunks = batchChunks, chunkIdCol = chunkIdCol, vecCol = vecCol,

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Skew mitigation for shuffle joins (SURVEY.md §6 / the 100 TB design
   * point). AQE's skew-join splitting handles most head keys at runtime;
@@ -85,10 +86,16 @@ object SkewOps {
     *
     * Cost model: the hot side pays `salts`× replication of its right
     * occurrence but divides the n²/salts-per-task quadratic work across
-    * `salts` tasks; the count aggregation adds one extra pass over `df`
-    * (both LSH call sites derive `df` from an internally-pinned frame,
-    * so that pass never re-reads the corpus). `hotThreshold =
-    * Long.MaxValue` (the default) bypasses the histogram entirely and
+    * `salts` tasks. The armed split reads the counted rows four times
+    * (cold x, cold y, hot x, hot y) and `df` twice (rows and histogram),
+    * and Catalyst infers a different null filter for each copy, so no
+    * exchange is reused: unpinned, `df`'s whole lineage (an LSH
+    * signature aggregation at the call sites) ran eight times and the
+    * histogram four. Both are therefore pinned ([[graft.Caches
+    * .trackedPersist]], the multi-consumer rule; released with the
+    * other operator pins): `df` and the histogram each run once, and
+    * the result stays lazy. `hotThreshold = Long.MaxValue` (the
+    * default) bypasses the histogram and the pins entirely and
     * compiles to the plain self-join.
     */
   def selfPairJoin(df: DataFrame, keyCols: Seq[String], idCol: String,
@@ -106,8 +113,10 @@ object SkewOps {
       val taken = df.columns.toSet
       val cnt = ColNames.fresh(taken, "_bucket_n")
       val salt = ColNames.fresh(taken + cnt, "_salt")
+      graft.Caches.trackedPersist(df, StorageLevel.MEMORY_AND_DISK)
       val counts = df.groupBy(keys: _*).agg(count(lit(1)).as(cnt))
-      val withCnt = df.join(counts, keyCols)
+      val withCnt = graft.Caches.trackedPersist(df.join(counts, keyCols),
+        StorageLevel.MEMORY_AND_DISK)
       val cold = withCnt.filter(col(cnt) <= hotThreshold).drop(cnt)
       val hot = withCnt.filter(col(cnt) > hotThreshold).drop(cnt)
       val hotX = hot.withColumn(salt,

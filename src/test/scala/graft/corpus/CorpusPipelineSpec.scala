@@ -1,5 +1,6 @@
 package graft.corpus
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -849,6 +850,96 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(idx.fingerprints.count() === n3("corpus_total"))
     assert(idx.shingles.count() === n3("corpus_total"))
     assert(idx.bands.select("id").distinct().count() === n3("corpus_total"))
+  }
+
+  // a fresh night, then a re-crawl night re-offering half of it (same ids
+  // and text) plus new documents: the dedup tiers' hit and miss paths
+  private def twoNights = {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val fresh = docs.filter(col("doc_id") < 160 && col("doc_id") % 2 === 0)
+    val recrawl = docs.filter(col("doc_id") < 160 && col("doc_id") % 4 === 0)
+      .unionByName(docs.filter(col("doc_id") < 50 && col("doc_id") % 2 === 1))
+    Seq(fresh, recrawl)
+  }
+
+  test("ingest: committed state matches the pre-pinning pipeline row for row (golden_ingest)") {
+    // expected files: the same two nights through the pipeline before the
+    // armed skew split pinned its inputs and the nightly index read
+    // supplied schemas
+    val state = Files.createTempDirectory("ingest-golden").toFile.getAbsolutePath
+    val results = twoNights.map(CorpusPipeline.ingest(spark, state, _))
+    val commits = new java.io.File(s"$state/commits").listFiles().toSeq
+      .filter(_.getName.startsWith("commit_")).sortBy(_.getName)
+    def table(t: String) = {
+      val batches = new java.io.File(s"$state/$t").listFiles().toSeq
+        .map(_.getName).filter(_.startsWith("batch_")).sorted
+      val df = spark.read.parquet(s"$state/$t/${batches.head}")
+      val cols = df.columns.sorted
+      ("batch" +: cols).mkString("|") +: batches.flatMap { b =>
+        spark.read.parquet(s"$state/$t/$b").select(cols.map(col): _*).collect()
+          .map(r => (b +: r.toSeq.map(String.valueOf)).mkString("|")).sorted
+      }
+    }
+    val actual = Seq(
+      "results.txt" -> results.map(_.toSeq.sorted.mkString("|")),
+      "commits.txt" -> commits.map(f =>
+        f.getName + "|" + new String(Files.readAllBytes(f.toPath), UTF_8))) ++
+      Seq("corpus", "index_fp", "index_sh", "index_bd").map(t => s"$t.txt" -> table(t))
+    actual.foreach { case (name, lines) =>
+      val expected = new String(getClass.getResourceAsStream(
+        s"/graft/corpus/golden_ingest/$name").readAllBytes(), UTF_8)
+      assert(lines.mkString("", "\n", "\n") === expected, s"$name differs")
+    }
+  }
+
+  test("ingest releases every block it pins, the armed skew split's included") {
+    val sc = spark.sparkContext
+    val state = Files.createTempDirectory("ingest-release").toFile.getAbsolutePath
+    graft.Caches.releaseAll()
+    val baseline = sc.getPersistentRDDs.keySet
+    // the default config arms the skew split, so both nights pin its
+    // frames; the peak shows blocks were held while a night ran
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        peak.accumulateAndGet(sc.getPersistentRDDs.keySet.diff(baseline).size, math.max)
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try twoNights.foreach { night =>
+      CorpusPipeline.ingest(spark, state, night)
+      assert(sc.getPersistentRDDs.keySet === baseline)
+    } finally {
+      org.apache.spark.graftbridge.ListenerBusFlush(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(peak.get() > 0, "ingest should have pinned frames while it ran")
+  }
+
+  test("clean plan: MinHash signatures and the (band, bucket) histogram are each planned once") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Final, Min}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val cfg = CorpusConfig()
+    assert(cfg.hotBucketThreshold < Long.MaxValue, "the default arms the skew split")
+    val out = CorpusPipeline.clean(docs, "doc_id", "text", cfg)
+    assert(out.collect().nonEmpty)
+    // submitted plans, cached ones included: AQE prunes the (empty) hot
+    // branch at run time, so the final plan alone would hide its copies
+    val aggs = graft.PlanFragments.nodes(out.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    val signatures = aggs.count(
+      _.aggregateExpressions.count(_.aggregateFunction.isInstanceOf[Min]) == cfg.numHashes)
+    val histograms = aggs.count(a =>
+      a.groupingExpressions.map(_.name) == Seq("band", "bucket") &&
+        a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Count]))
+    assert(signatures === 1, "MinHash signature aggregations in the plan")
+    assert(histograms === 1, "(band, bucket) count aggregations in the plan")
+    graft.Caches.releaseAll()
   }
 
   test("ingest crash recovery: uncommitted orphans are invisible; replay converges") {

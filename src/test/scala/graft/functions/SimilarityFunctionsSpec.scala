@@ -104,6 +104,26 @@ class SimilarityFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("lshNeighborPairs: the armed skew split returns the plain pair set on a dense cluster") {
+    val rng = new scala.util.Random(11L)
+    // 60 copies of one vector fill one (band, key) bucket per band, far
+    // past the armed threshold; the random tail stays in cold buckets
+    val center = seededUnitVec(rng, 32)
+    val corpus = ((0L until 60L).map(i => (i, center)) ++
+      (1000L until 1100L).map(i => (i, seededUnitVec(rng, 32))))
+      .toDF("vec_id", "embedding")
+    def pairs(hotBucketThreshold: Long) = SimilarityFunctions.lshNeighborPairs(
+        corpus, dim = 32, nBits = 16, bands = 4, minCosine = 0.3,
+        hotBucketThreshold = hotBucketThreshold, salts = 4)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    val plain = pairs(Long.MaxValue)
+    assert(plain.count { case (_, b, _) => b < 60L } === 60 * 59 / 2,
+      "every cluster member pairs with every other")
+    assert(plain.exists { case (a, _, _) => a >= 1000L }, "the cold tail pairs too")
+    assert(pairs(8L) === plain)
+    graft.Caches.releaseAll()
+  }
+
   test("banded LSH recovers planted near-duplicates with recall >= 0.9") {
     val rng = new scala.util.Random(7L)
     val base = (0L until 200L).map(i => (i, seededUnitVec(rng, 64)))

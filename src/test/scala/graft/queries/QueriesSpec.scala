@@ -121,9 +121,6 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("mix1 tokenizes the corpus exactly once (one BpeEncode site behind the pinned cells)") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     graft.Caches.releaseAll()
     // building the query runs BPE training eagerly (8 bounded-collect
     // merge rounds — the train cost, not tokenization); the RETURNED
@@ -132,22 +129,8 @@ class QueriesSpec extends AnyFunSuite {
     // the budget cells and the global total both read that cache, so
     // the corpus encodes exactly once per run.
     val df = Queries.byName("mix1_token_accounting")(spark, sf)
-    // a pinned frame read from TWO scan sites is still ONE compute —
-    // dedup cached fragments by relation identity before counting
-    val seenCaches = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def fragments(p: SparkPlan): Seq[SparkPlan] = {
-      val nodes = p.collect { case n => n }
-      p +: nodes.flatMap {
-        case i: InMemoryTableScanExec =>
-          if (seenCaches.add(i.relation.cachedPlan)) fragments(i.relation.cachedPlan)
-          else Nil
-        case a: AdaptiveSparkPlanExec => fragments(a.initialPlan)
-        case _ => Nil
-      }
-    }
-    val sites = fragments(df.queryExecution.executedPlan)
-      .flatMap(_.collect { case n => n })
+    // a pinned frame read from TWO scan sites is still ONE compute
+    val sites = graft.PlanFragments.nodes(df.queryExecution.executedPlan)
       .count(_.expressions.exists(
         _.find(_.isInstanceOf[graft.functions.BpeEncode]).isDefined))
     assert(sites === 1,
