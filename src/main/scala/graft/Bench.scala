@@ -26,7 +26,6 @@ object Bench {
     val outFile = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("bench_out.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
     // second in-run load defense (r12: System.gc() between queries cut
     // the full-registry inflation vs the idle-box bank from +42% to
@@ -41,19 +40,8 @@ object Bench {
     val batch = sys.env.getOrElse("SPARK_GRAFT_BENCH_BATCH", "25").toInt
 
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        // harmless for TIMESTAMP(MICROS) events.parquet; required for the
-        // TIMESTAMP(NANOS) generation (see Queries.events).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      // warm-up: JVM/codegen/FS-cache, so per-query numbers measure the
-      // queries rather than first-job startup.
-      for (t <- Seq("lineitem", "documents", "embeddings"))
-        s.read.parquet(s"$sfDir/$t.parquet").count()
+      val s = Sessions.local()
+      Sessions.warm(s, sfDir)
       s
     }
     var spark = newSession()

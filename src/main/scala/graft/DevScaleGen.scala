@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only sf1 generator for the 10× scale probe (r13 verdict task 3):
@@ -38,13 +38,7 @@ object DevScaleGen {
     // families, and 100× facts would cost disk without adding signal.
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     require(factor >= 1, s"factor must be >= 1 (got $factor)")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import spark.implicits._
 
     val vocab: Array[String] = spark.read.parquet(s"$srcDir/documents.parquet")

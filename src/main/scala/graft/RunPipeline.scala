@@ -29,16 +29,7 @@ object RunPipeline {
     val end = opt("--end").getOrElse("2001-12-31")
     val tolerance = opt("--tolerance").map(_.toDouble).getOrElse(0.5)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harmless for TIMESTAMP(MICROS) events.parquet; required for the
-      // TIMESTAMP(NANOS) generation (see Queries.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // SQL users of the app session get the native kernels too
     // (vec_cosine / vec_dot / topk_freq / winnow_fingerprints)
     graft.functions.GraftFunctions.register(spark)

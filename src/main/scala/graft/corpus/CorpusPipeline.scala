@@ -1221,12 +1221,7 @@ object CorpusPipeline {
         minWords = parts.headOption.map(_.toLong).getOrElse(50L),
         minStopwordHits = parts.lift(1).map(_.toInt).getOrElse(2))
     }
-    val spark = SparkSession.builder()
-      .appName("graft-corpus").master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     // --classifier [lang[:minScore]] trains is-<lang> NB log-odds on the
     // even-id half of the input's lang labels and gates at minScore —
     // the self-contained CLI form of the classifier screen (a real

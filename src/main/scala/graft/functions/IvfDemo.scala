@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end ANN demo over the embeddings testdata: train IVF
@@ -13,12 +12,7 @@ object IvfDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val k = args.lift(1).map(_.toInt).getOrElse(5)
     val nProbe = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val centroids = SimilarityFunctions.trainCentroids(emb, k = 16)
     val queries = emb.filter(col("vec_id") < 8)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Minimal runnable streaming entry: incremental hourly aggregation over
@@ -12,17 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harmless for TIMESTAMP(MICROS) generations of events.parquet;
-      // required when the file carries TIMESTAMP(NANOS) (readEvents
-      // branches on the observed footer schema either way)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val q = EventStreams.hourlyCounts(EventStreams.readEvents(spark, dir, streaming = true))
       .writeStream.format("memory").queryName("hourly")

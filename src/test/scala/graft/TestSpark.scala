@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for every suite (sbt forks one test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries nanosecond timestamps; query/stream
-      // functions are pure and expect the session pre-configured.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Sessions.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

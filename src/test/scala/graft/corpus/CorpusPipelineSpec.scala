@@ -912,7 +912,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       CorpusPipeline.ingest(spark, state, night)
       assert(sc.getPersistentRDDs.keySet === baseline)
     } finally {
-      org.apache.spark.graftbridge.ListenerBusFlush(sc)
+      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(sc)
       sc.removeSparkListener(listener)
     }
     assert(peak.get() > 0, "ingest should have pinned frames while it ran")

@@ -306,11 +306,11 @@ class RequestRunnerSpec extends AnyFunSuite {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.incrementAndGet()
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.incrementAndGet()
     }
-    org.apache.spark.graftbridge.ListenerBusFlush(spark.sparkContext)
+    org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       runGolden()
-      org.apache.spark.graftbridge.ListenerBusFlush(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(executions.get <= 20, s"${executions.get} SQL executions")
   }
