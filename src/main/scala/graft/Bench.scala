@@ -47,13 +47,12 @@ object Bench {
     var spark = newSession()
 
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // several operators persist() shared lineage internally; drop those
-      // blocks BEFORE the timer starts so every iteration measures the
-      // cold query (not a warm-cache replay of the previous iteration)
-      // and the cache cannot grow across 43 queries × N iterations.
-      // releaseAll additionally drains the tracked-pin registry itself —
-      // clearCache drops the blocks but leaves the plan handles queued.
-      Caches.releaseAll()
+      // several operators persist() shared lineage internally; each
+      // iteration runs in its own Caches.scoped block, whose close drops
+      // those blocks after the timer stops, so every iteration measures
+      // the cold query (not a warm-cache replay of the previous
+      // iteration) and the cache cannot grow across queries × N
+      // iterations. clearCache drops anything cached outside a scope.
       spark.catalog.clearCache()
       // in-run load defense (r11: the 314-query x 3-iter JVM inflated
       // min-of-3 numbers +42% over the idle-box bank, worst queries
@@ -61,16 +60,18 @@ object Bench {
       // timed window, so each measurement starts from a settled heap
       // instead of paying its predecessors' collection debt.
       System.gc()
-      val t0 = System.nanoTime()
-      // NOT df.count(): wrapping the query in Aggregate(count(1)) lets
-      // ColumnPruning delete every computation that only feeds output
-      // columns — e.g. the as-of joins' entire window stage — so count()
-      // times a gutted plan (j4 "ran" 2x faster than its identical-plan
-      // forward twin purely because the twin's filter referenced the
-      // window output). Executing the compiled physical plan as-is pays
-      // for every output column, like a real sink would.
-      fn(spark, sfDir).queryExecution.toRdd.count()
-      (System.nanoTime() - t0) / 1e9
+      Caches.scoped {
+        val t0 = System.nanoTime()
+        // NOT df.count(): wrapping the query in Aggregate(count(1)) lets
+        // ColumnPruning delete every computation that only feeds output
+        // columns — e.g. the as-of joins' entire window stage — so count()
+        // times a gutted plan (j4 "ran" 2x faster than its identical-plan
+        // forward twin purely because the twin's filter referenced the
+        // window output). Executing the compiled physical plan as-is pays
+        // for every output column, like a real sink would.
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
 
     // local-iteration filter (comma-separated names); the driver never
@@ -82,10 +83,9 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       if (batch > 0 && sinceRestart >= batch) {
-        // drop every pinned block and the session with it; the next
-        // batch gets a fresh context (see `batch` above). Outside any
-        // timed window by construction.
-        Caches.releaseAll()
+        // drop the session and every block it held; the next batch gets
+        // a fresh context (see `batch` above). Outside any timed window
+        // by construction.
         spark.stop()
         spark = newSession()
         sinceRestart = 0
@@ -167,7 +167,6 @@ object Bench {
       results.flatMap { case (name, mn, _) =>
         bankQueries.get(name) match {
           case Some(bank) if mn >= 2.0 && bank > 0.0 && mn > 2.0 * bank =>
-            Caches.releaseAll()
             spark.stop()
             spark = newSession()
             sinceRestart = 0

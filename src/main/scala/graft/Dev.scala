@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.Bridge
 
 import scala.collection.mutable
@@ -40,18 +41,11 @@ object Dev {
       s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
-    // every run starts cold: no pinned blocks of an earlier run, settled heap
-    def fresh(): Unit = {
-      Caches.releaseAll()
-      spark.catalog.clearCache()
-      System.gc()
-    }
     try pos(0) match {
       case "profile" =>
         Sessions.warm(spark, sfDir)
-        profile(spark, name, pos.lift(2).map(_.toInt).getOrElse(2), fresh _, () => fn(spark, sfDir))
-      case "plan" =>
-        fresh()
+        profile(spark, name, pos.lift(2).map(_.toInt).getOrElse(2), () => fn(spark, sfDir))
+      case "plan" => fresh(spark) {
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         df.queryExecution.toRdd.count()
@@ -60,12 +54,22 @@ object Dev {
         Files.writeString(Paths.get(pos(2)),
           f"=== FINAL EXECUTED PLAN $name sf=$sfDir wall=$wall%.2f s ===%n" + plan)
         println(f"[finalplan] $name wall=$wall%.2f s  plan_chars=${plan.length} -> ${pos(2)}")
-      case "explain" =>
-        fresh()
+      }
+      case "explain" => fresh(spark) {
         val df = fn(spark, sfDir)
         df.explain("formatted")
         if (flags.contains("--count")) println(s"ROWS=${df.count()}")
+      }
     } finally spark.stop()
+  }
+
+  /** Every run starts cold (no cache of an earlier run, settled heap) and
+    * runs in its own scope, whose close releases the query's pins.
+    */
+  private def fresh[T](spark: SparkSession)(run: => T): T = {
+    spark.catalog.clearCache()
+    System.gc()
+    Caches.scoped(run)
   }
 
   private final case class StageAgg(
@@ -75,7 +79,7 @@ object Dev {
       var wallMs: Long = 0L, var site: String = "")
 
   private def profile(spark: SparkSession, name: String, iters: Int,
-      fresh: () => Unit, build: () => DataFrame): Unit = {
+      build: () => DataFrame): Unit = {
     val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
     // job timeline: (submitMs, endMs) — wall not covered by any job is
     // DRIVER time, which stage metrics cannot see
@@ -86,9 +90,28 @@ object Dev {
     // run is dropped or leaks into the next iteration
     @volatile var collecting = false
     def agg(stageId: Int): StageAgg = stages.synchronized(stages.getOrElseUpdate(stageId, StageAgg()))
+    // SQL execution id -> (root execution id, long call site), and each
+    // stage's execution: broadcast and AQE stages are submitted from
+    // Spark's own threads, so their call site holds no graft frame, but
+    // their job carries the execution id of the action that started them
+    val execs = mutable.HashMap.empty[Long, (Long, String)]
+    val stageExec = mutable.HashMap.empty[Int, Long]
+    // graft frames only, minus the profiler's own and the scope it runs in
+    def graftFrames(callSite: String): String = callSite.linesIterator
+      .filter(l => l.contains("graft.") && !l.contains("(Dev.scala") && !l.contains("Caches$.scoped"))
+      .map(_.trim.stripPrefix("at ")).take(3).mkString(" <- ")
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = if (collecting)
-        jobs.synchronized { jobStart(j.jobId) = j.time; () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execs.synchronized {
+          execs(x.executionId) = (x.rootExecutionId.getOrElse(x.executionId), x.details); ()
+        }
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = if (collecting) {
+        jobs.synchronized { jobStart(j.jobId) = j.time }
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => execs.synchronized(j.stageIds.foreach(stageExec(_) = id.toLong)))
+      }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = if (collecting)
         jobs.synchronized { jobStart.remove(j.jobId).foreach(t0 => jobs += ((t0, j.time))) }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (collecting) {
@@ -110,11 +133,18 @@ object Dev {
         a.synchronized {
           a.name = s.stageInfo.name.takeWhile(_ != '\n')
           // the long-form callsite (graft frames only) attributes the stage
-          // to the OPERATOR that created it — the stage name alone is
-          // useless for broadcast futures
-          a.site = s.stageInfo.details.linesIterator
-            .filter(l => l.contains("graft.") && !l.contains("(Dev.scala"))
-            .take(3).mkString(" <- ")
+          // to the OPERATOR that created it; a stage submitted from a
+          // broadcast or AQE thread takes its execution's call site, or
+          // the root execution's for a nested one. The profiled plan itself
+          // runs through toRdd, outside any SQL execution, so its stages
+          // carry neither and are labelled as the query's own
+          val exec = execs.synchronized {
+            stageExec.get(s.stageInfo.stageId).flatMap(execs.get).toSeq
+              .flatMap { case (root, site) => Seq(site) ++ execs.get(root).map(_._2) }
+          }
+          a.site = (s.stageInfo.details +: exec).iterator.map(graftFrames)
+            .find(_.nonEmpty)
+            .getOrElse(if (exec.isEmpty) s"graft.Dev profile $name: the query's own plan" else "")
           a.wallMs = (for {
             c <- s.stageInfo.completionTime
             b <- s.stageInfo.submissionTime
@@ -124,13 +154,15 @@ object Dev {
     })
     for (iter <- 1 to iters) {
       stages.synchronized(stages.clear())
-      fresh()
-      collecting = true
-      val t0 = System.nanoTime()
-      build().queryExecution.toRdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Bridge.flushListenerBus(spark.sparkContext)
-      collecting = false
+      val wall = fresh(spark) {
+        collecting = true
+        val t0 = System.nanoTime()
+        build().queryExecution.toRdd.count()
+        val w = (System.nanoTime() - t0) / 1e9
+        Bridge.flushListenerBus(spark.sparkContext)
+        collecting = false
+        w
+      }
       println(f"%n[profile] $name iter $iter wall=$wall%.2f s  (stages by summed task run time)")
       println(f"[profile] ${"stage"}%-7s ${"tasks"}%5s ${"run_s"}%8s ${"cpu_s"}%8s ${"gc_s"}%6s ${"wall_s"}%7s ${"in_MB"}%8s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"spill_MB"}%8s  name")
       val rows = stages.synchronized(stages.toSeq).sortBy(-_._2.runTimeMs)

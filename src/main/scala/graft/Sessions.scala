@@ -9,12 +9,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   /** `local[cpus]` with shuffle partitions equal to cpus, UTC session
-    * time, UI off and log level WARN. `cpus` defaults to
-    * SPARK_GRAFT_CPUS, else every available processor.
+    * time and UI off. `cpus` defaults to SPARK_GRAFT_CPUS, else every
+    * available processor.
     */
   def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
-    val s = SparkSession.builder()
+      .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
@@ -25,9 +25,6 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** JVM, codegen and file-cache warm-up over the three largest tables,
     * so timings that follow measure the queries rather than first-job

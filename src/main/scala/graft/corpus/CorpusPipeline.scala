@@ -256,6 +256,14 @@ object CorpusPipeline {
     * n-gram gate, catching paraphrased eval leakage that shares no
     * exact grams. Both sides pool through the same 6dp/quantize path,
     * and one pooled frame serves the dedup tier AND this gate.
+    *
+    * Lifetime: the result reads pins, and with the semantic tier armed
+    * also stage checkpoints (lineage-truncated blocks), registered in the
+    * enclosing [[graft.Caches.scoped]] block. A checkpoint-backed result
+    * is valid only until that scope closes, and it is not recomputed
+    * after executor loss — a released or lost block fails the query with
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`. Consume or write it inside the
+    * scope.
     */
   def clean(docs: DataFrame, idCol: String, textCol: String,
       cfg: CorpusConfig = CorpusConfig(),
@@ -338,7 +346,8 @@ object CorpusPipeline {
       case Some(h) =>
         // the dedup survivors feed BOTH the contamination report and
         // the drop anti-join — pin them so the whole gate/dedup chain
-        // executes once (the multi-consumer rule; Caches.releaseAll).
+        // executes once (the multi-consumer rule; released when the
+        // caller's Caches.scoped block closes).
         // A pin, not a checkpoint: same shallow-depth argument as the
         // `exact` pin above (the r16 checkpoint A/B read c7 0.75×)
         val pinned = graft.Caches.trackedPersist(textDeduped0,
@@ -356,8 +365,9 @@ object CorpusPipeline {
         // survivor semi-join and the final cluster anti-join —
         // materialize them so the whole gate/scrub/dedup chain executes
         // once, not once per consumer; checkpointed (not pinned) so the
-        // semantic tier plans against a leaf (released via
-        // Caches.releaseAll, like every operator-internal pin)
+        // semantic tier plans against a leaf (released when the
+        // caller's Caches.scoped block closes, like every
+        // operator-internal pin)
         val pinned = graft.Caches.trackedCheckpoint(textDeduped)
         holdoutChunks match {
           case Some(hc) =>
@@ -473,7 +483,8 @@ object CorpusPipeline {
     * aggregation sized by `docs` itself (at accept time that is the
     * night's batch, never history). The shingle frame feeds both the
     * stored table and the signature aggregation, so it is pinned (the
-    * library-wide multi-consumer rule; released via `Caches.releaseAll`).
+    * library-wide multi-consumer rule; released when the caller's
+    * `Caches.scoped` block closes).
     */
   def buildTextIndex(docs: DataFrame, idCol: String, textCol: String,
       cfg: CorpusConfig = CorpusConfig()): TextIndex = {
@@ -546,21 +557,6 @@ object CorpusPipeline {
       vecs, sc.dim, sc.nBits, sc.bands, "id", "vec", sc.seed))
   }
 
-  /** [[appendBatch]] against precomputed corpus state — the steady-
-    * state nightly shape: the corpus contributes only its 16-byte
-    * fingerprints, its stored band keys (text AND semantic), and —
-    * solely for candidate verification — its shingle and pooled-vector
-    * tables; its text and chunk embeddings are not touched at all, and
-    * NOTHING corpus-sided is aggregated, re-signatured, or re-pooled
-    * (the stored-bands contract, spec-pinned against the plan).
-    * Semantics are identical to [[appendBatch]] (same stages 1-4).
-    *
-    * `semanticIndex = None` with `semantic` armed means the corpus has
-    * no vector state yet (e.g. it was seeded text-only): the batch
-    * still semantic-dedups WITHIN itself via stage 1, and the
-    * vs-corpus embedding arm is skipped — mixed-arming degrades
-    * gracefully instead of failing the night.
-    */
   /** Stage-2 exact-vs-corpus probe of [[appendBatchIndexed]], split out
     * so its plan shape is testable BEFORE the stage materializes (the
     * checkpoint erases the lineage from the returned plan). `withFp`
@@ -604,6 +600,28 @@ object CorpusPipeline {
         withFp.join(indexFingerprints.select(col("fp").as(fp)), Seq(fp), "left_anti")
     }
 
+  /** [[appendBatch]] against precomputed corpus state — the steady-
+    * state nightly shape: the corpus contributes only its 16-byte
+    * fingerprints, its stored band keys (text AND semantic), and —
+    * solely for candidate verification — its shingle and pooled-vector
+    * tables; its text and chunk embeddings are not touched at all, and
+    * NOTHING corpus-sided is aggregated, re-signatured, or re-pooled
+    * (the stored-bands contract, spec-pinned against the plan).
+    * Semantics are identical to [[appendBatch]] (same stages 1-4).
+    *
+    * `semanticIndex = None` with `semantic` armed means the corpus has
+    * no vector state yet (e.g. it was seeded text-only): the batch
+    * still semantic-dedups WITHIN itself via stage 1, and the
+    * vs-corpus embedding arm is skipped — mixed-arming degrades
+    * gracefully instead of failing the night.
+    *
+    * Lifetime: the result reads this call's stage checkpoints
+    * (lineage-truncated blocks), so it is valid only until the enclosing
+    * [[graft.Caches.scoped]] block closes, and it is not recomputed after
+    * executor loss — a released or lost block fails the query with
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`. Consume or write it inside the
+    * scope.
+    */
   def appendBatchIndexed(index: TextIndex, batch: DataFrame, idCol: String,
       textCol: String, cfg: CorpusConfig = CorpusConfig(),
       semanticIndex: Option[SemanticIndex] = None,
@@ -624,7 +642,8 @@ object CorpusPipeline {
     // stage, CacheManager sameResult probes per entry) re-walks the
     // whole accumulated plan tree — measured as 13-19 s of driver gaps
     // in c6's 24-33 s wall (guide §7.3: materialize intermediates to
-    // truncate very large plans). Same Caches.releaseAll protocol.
+    // truncate very large plans). Released with the caller's
+    // Caches.scoped block.
     //
     // 1. the batch becomes internally canonical. The semantic arm runs
     // OUTSIDE clean() here so the batch's chunk table pools exactly
@@ -1018,6 +1037,13 @@ object CorpusPipeline {
     * lineage reads committed state, and a lazy plan re-executing
     * mid-write could otherwise see in-flight files. Returns
     * ingested/corpus-total counts.
+    *
+    * Lifetime: each night runs in its own [[graft.Caches.scoped]] block,
+    * which releases the night's pins and stage checkpoints when it
+    * returns and never touches blocks another caller registered. The
+    * checkpoints are not recomputed after executor loss: a lost block
+    * fails the night before its commit marker is written, and replaying
+    * the batch re-runs it against the last committed state.
     */
   def ingest(spark: SparkSession, stateDir: String, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1053,37 +1079,41 @@ object CorpusPipeline {
         s"$stateDir holds a committed SemanticIndex; pass batchChunks + " +
           "SemanticConfig so this batch extends it (or compact to a new " +
           "text-only state dir to drop the semantic tier deliberately)")
-    val docs = batch.select(col(idCol), col(textCol))
-    val cleaned =
-      if (committed.isEmpty)
-        clean(docs, idCol, textCol, cfg, batchChunks, chunkIdCol, vecCol,
-          semantic, holdout = holdout)
-      else appendBatchIndexed(
-        readTextIndex(spark, stateDir, Some(docs.schema(idCol).dataType)), docs, idCol,
-        textCol, cfg,
-        semanticIndex = semantic.flatMap(_ => readSemanticIndex(spark, stateDir)),
-        batchChunks = batchChunks, chunkIdCol = chunkIdCol, vecCol = vecCol,
-        semantic = semantic,
-        // the PROBE arms only when the cfg asks, every committed batch
-        // stored a filter (readFpBloom's no-false-negative rule), AND
-        // the corpus:batch ratio clears cfg.fpBloomMinRatio — below the
-        // crossover the plain anti-join is cheaper (filters still get
-        // WRITTEN below, so the sketch stays complete for the night the
-        // ratio clears)
-        // the batch count() job only runs when the ratio test can use
-        // it — with the gate unconfigured (or the ratio floor disabled)
-        // Scala's strict argument evaluation would otherwise scan the
-        // whole uncached batch just to discard the number
-        fpBloom =
-          if (cfg.fpBloomItems.isDefined &&
-              (cfg.fpBloomMinRatio <= 0.0 ||
-                bloomProbeArmed(cfg, corpusTotal(spark, stateDir), docs.count())))
-            readFpBloom(spark, stateDir)
-          else None,
-        holdout = holdout)
-    val (survivors, releaseSurvivors) =
-      graft.internal.Checkpoints.localCheckpointTracked(cleaned)
-    try {
+    // one scope for the whole night: the append's stage checkpoints and
+    // pins and the survivors' checkpoint are released when it closes,
+    // and nothing another caller registered elsewhere is touched
+    graft.Caches.scoped {
+      val docs = batch.select(col(idCol), col(textCol))
+      val cleaned =
+        if (committed.isEmpty)
+          clean(docs, idCol, textCol, cfg, batchChunks, chunkIdCol, vecCol,
+            semantic, holdout = holdout)
+        else appendBatchIndexed(
+          readTextIndex(spark, stateDir, Some(docs.schema(idCol).dataType)), docs, idCol,
+          textCol, cfg,
+          semanticIndex = semantic.flatMap(_ => readSemanticIndex(spark, stateDir)),
+          batchChunks = batchChunks, chunkIdCol = chunkIdCol, vecCol = vecCol,
+          semantic = semantic,
+          // the PROBE arms only when the cfg asks, every committed batch
+          // stored a filter (readFpBloom's no-false-negative rule), AND
+          // the corpus:batch ratio clears cfg.fpBloomMinRatio — below the
+          // crossover the plain anti-join is cheaper (filters still get
+          // WRITTEN below, so the sketch stays complete for the night the
+          // ratio clears)
+          // the batch count() job only runs when the ratio test can use
+          // it — with the gate unconfigured (or the ratio floor disabled)
+          // Scala's strict argument evaluation would otherwise scan the
+          // whole uncached batch just to discard the number
+          fpBloom =
+            if (cfg.fpBloomItems.isDefined &&
+                (cfg.fpBloomMinRatio <= 0.0 ||
+                  bloomProbeArmed(cfg, corpusTotal(spark, stateDir), docs.count())))
+              readFpBloom(spark, stateDir)
+            else None,
+          holdout = holdout)
+      // no partition floor: the survivors' partitioning decides the
+      // committed file count of every state table written below
+      val survivors = graft.Caches.trackedCheckpoint(cleaned, minParts = 0)
       val n = survivors.count()
       // batch-scoped staged writes: mode("overwrite") into THIS batch's
       // dirs, so a crashed attempt's orphans are replaced, never mixed
@@ -1119,12 +1149,6 @@ object CorpusPipeline {
       finally marker.close()
       Map("ingested" -> n,
         "corpus_total" -> corpusTotal(spark, stateDir))
-    } finally {
-      releaseSurvivors()
-      // the append's internal pins (batch-clean, after-exact, index
-      // frames) served their consumers; ingest is a single-tenant
-      // driver entry, so drain them like Bench/Verify do between queries
-      graft.Caches.releaseAll()
     }
   }
 

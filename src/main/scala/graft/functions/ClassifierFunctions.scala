@@ -127,13 +127,15 @@ object ClassifierFunctions {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
     val spark = labeled.sparkSession
     import spark.implicits._
-    val (feats, release) = graft.Caches.pin(
-      SamplingFunctions.hashedNgramFeatures(labeled, textCol, buckets, hash,
-          Seq(col(idCol).as("_id"), col(labelCol).cast("boolean").as("_y")))
-        .groupBy(col("_id"), col("_y"), col("_b"))
-        .agg(count(lit(1)).cast("double").as("_c")),
-      storage)
-    try {
+    // a nested scope: the returned weights are driver-built, so the
+    // pinned feature frame is released when training ends
+    graft.Caches.scoped {
+      val feats = graft.Caches.trackedPersist(
+        SamplingFunctions.hashedNgramFeatures(labeled, textCol, buckets, hash,
+            Seq(col(idCol).as("_id"), col(labelCol).cast("boolean").as("_y")))
+          .groupBy(col("_id"), col("_y"), col("_b"))
+          .agg(count(lit(1)).cast("double").as("_c")),
+        storage)
       val docTotals = feats.groupBy(col("_id"))
         .agg(sum(col("_c")).as("_tot"))
       val nDocs = feats.select(col("_id")).distinct().count().toDouble
@@ -172,7 +174,7 @@ object ClassifierFunctions {
         .collect { case (v, b) if v != 0.0 => (b.toLong, v) }
         .toDF("bucket", "weight")
       (weights, bias)
-    } finally release()
+    }
   }
 
   /** Batch gradient descent on logistic loss over a SMALL DENSE feature
@@ -214,13 +216,14 @@ object ClassifierFunctions {
     import spark.implicits._
     val d = featureCols.size
     val xs = (0 until d).map(j => s"_x$j")
-    val (feats, release) = graft.Caches.pin(
-      labeled.select(
-        (featureCols.zipWithIndex.map { case (c, j) =>
-          c.cast("double").as(s"_x$j") } :+
-          labelCol.cast("double").as("_y")): _*),
-      StorageLevel.MEMORY_AND_DISK)
-    try {
+    // a nested scope, as in trainLogisticHashed: the result is driver-built
+    graft.Caches.scoped {
+      val feats = graft.Caches.trackedPersist(
+        labeled.select(
+          (featureCols.zipWithIndex.map { case (c, j) =>
+            c.cast("double").as(s"_x$j") } :+
+            labelCol.cast("double").as("_y")): _*),
+        StorageLevel.MEMORY_AND_DISK)
       val n = feats.count().toDouble
       require(n > 0, "no labeled rows")
       val w = new Array[Double](d)
@@ -252,7 +255,7 @@ object ClassifierFunctions {
       w.toSeq.zipWithIndex
         .map { case (wj, j) => (j.toLong, wj, m.getDouble(0), m.getDouble(1), n.toLong) }
         .toDF("feature_idx", "weight", "log_loss", "accuracy", "n")
-    } finally release()
+    }
   }
 
   /** Isotonic calibration of classifier scores (Zadrozny & Elkan, KDD

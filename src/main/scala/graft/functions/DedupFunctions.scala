@@ -438,8 +438,7 @@ object DedupFunctions {
     val sh0 = df.select(col(idCol).as("id"),
         wordShingles(col(textCol), n).as("shingles"))
       .withColumn("n_sh", size(col("shingles")).cast("long"))
-    val sh = if (storage != StorageLevel.NONE)
-      graft.Caches.trackedPersist(sh0, storage) else sh0
+    val sh = graft.Caches.trackedPersist(sh0, storage)
     val exploded = sh.select(col("id"), col("n_sh"), explode(col("shingles")).as("sh"))
     // df-cap WITHOUT a shingle-partitioned window (a boilerplate shingle
     // with huge df is exactly the row pile that would single-task): the
@@ -511,8 +510,7 @@ object DedupFunctions {
     val sh0 = df.select(col(idCol).as("id"),
         wordShingles(col(textCol), n).as("shingles"))
       .withColumn("n_sh", size(col("shingles")).cast("long"))
-    val sh = if (storage != StorageLevel.NONE)
-      graft.Caches.trackedPersist(sh0, storage) else sh0
+    val sh = graft.Caches.trackedPersist(sh0, storage)
     val e = sh.select(col("id"), col("n_sh"), explode(col("shingles")).as("sh"))
     val dfc = e.groupBy(col("sh")).agg(count(lit(1)).as("_df"))
     val ranked = e.join(dfc, Seq("sh"))
@@ -662,7 +660,7 @@ object DedupFunctions {
       hotBucketThreshold: Long = Long.MaxValue, salts: Int = 16): DataFrame = {
     val rows = numHashes / bands
     val sh = df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("shingles"))
-    if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(sh, storage)
+    graft.Caches.trackedPersist(sh, storage)
     val sigs = minhashSignaturesFromShingles(sh, numHashes, hash)
     val banded = sigs.select(col("id"),
         explode(lshBands(col("sig"), bands, rows, bucketHash)).as("bb"))
@@ -731,7 +729,7 @@ object DedupFunctions {
     // the batch shingle frame feeds its signature branch AND the verify
     // join; pinned like every multi-consumer frame here
     val shB = incoming.select(col("id"), col("shingles"))
-    if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(shB, storage)
+    graft.Caches.trackedPersist(shB, storage)
     val batchBands0 = bandedSignatures(shB, numHashes, bands, hash, bucketHash)
     val batchBands = if (broadcastBatchSide) broadcast(batchBands0) else batchBands0
     val cands0 = existingBands.as("x").join(batchBands.as("y"), Seq("band", "bucket"))
@@ -777,7 +775,7 @@ object DedupFunctions {
       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     def prep(df: DataFrame): DataFrame = {
       val sh = df.select(col("id"), col("shingles"))
-      if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(sh, storage)
+      graft.Caches.trackedPersist(sh, storage)
       sh
     }
     def banded(sh: DataFrame): DataFrame =
@@ -1036,8 +1034,8 @@ object DedupFunctions {
       col("id").as("tie"))
     // the scored node frame feeds both the argmax aggregation and the
     // join-back — pin it so clustering + the score attach execute once
-    // (the library-wide multi-consumer rule; released via
-    // Caches.releaseAll)
+    // (the library-wide multi-consumer rule; released when the
+    // caller's Caches.scoped block closes)
     val scored = graft.Caches.trackedPersist(
       cc.join(
         df.select(col(idCol).as("id"), col(scoreCol).cast("double").as("_s")),

@@ -32,8 +32,8 @@ object RelevanceFunctions {
     * `StorageLevel.NONE` to disable) — without it the corpus tokenization
     * runs twice, once per DAG branch. Cached rows are (id, tokens, 1
     * long)/row ≈ the corpus size; at 100 TB the caller picks the level
-    * (e.g. DISK_ONLY) or pre-tokenizes to a table. Release via
-    * [[graft.Caches.releaseAll]].
+    * (e.g. DISK_ONLY) or pre-tokenizes to a table. Released when the
+    * caller's [[graft.Caches.scoped]] block closes.
     */
   def bm25(df: DataFrame, idCol: String, textCol: String, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75,
@@ -43,8 +43,7 @@ object RelevanceFunctions {
     val base0 = df.select(col(idCol),
         split(lower(trim(col(textCol))), "\\s+").as("_toks"))
       .withColumn("_dl", size(col("_toks")).cast("long"))
-    val base = if (storage != StorageLevel.NONE)
-      graft.Caches.trackedPersist(base0, storage) else base0
+    val base = graft.Caches.trackedPersist(base0, storage)
     // one fused aggregate: corpus size, total length, and every term's
     // document frequency in a single reduce-to-one-row pass
     val statCols =
@@ -150,10 +149,9 @@ object RelevanceFunctions {
     // are pinned at `storage` (NONE disables) so the corpus explodes once
     // and the vocab aggregates once — unpinned, the explode evaluates up
     // to three times. toks caches one (id, token) row per OCCURRENCE ≈
-    // corpus token count; vocab is Zipf-small. Release via
-    // [[graft.Caches.releaseAll]].
-    def pinned(d: DataFrame): DataFrame =
-      if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(d, storage) else d
+    // corpus token count; vocab is Zipf-small. Released when the
+    // caller's [[graft.Caches.scoped]] block closes.
+    def pinned(d: DataFrame): DataFrame = graft.Caches.trackedPersist(d, storage)
     val toks = pinned(df.select(col(idCol),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("_tok"))
       .filter(length(col("_tok")) > 0))
@@ -199,8 +197,7 @@ object RelevanceFunctions {
       minCount: Long = 1L,
       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     require(minCount >= 1L, s"minCount must be >= 1 (got $minCount)")
-    def pinned(d: DataFrame): DataFrame =
-      if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(d, storage) else d
+    def pinned(d: DataFrame): DataFrame = graft.Caches.trackedPersist(d, storage)
     val bigrams = pinned(df.select(col(idCol),
         explode(TextFunctions.bound(split(lower(trim(col(textCol))), "\\s+")) { toks =>
           TextFunctions.bound(size(toks)) { n =>
@@ -272,8 +269,7 @@ object RelevanceFunctions {
     require(minCount >= 1L, s"minCount must be >= 1 (got $minCount)")
     require(discount > 0.0 && discount < 1.0,
       s"discount must be in (0, 1) (got $discount)")
-    def pinned(d: DataFrame): DataFrame =
-      if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(d, storage) else d
+    def pinned(d: DataFrame): DataFrame = graft.Caches.trackedPersist(d, storage)
     val bigrams = pinned(df.select(col(idCol),
         explode(TextFunctions.bound(split(lower(trim(col(textCol))), "\\s+")) { toks =>
           TextFunctions.bound(size(toks)) { n =>
@@ -583,8 +579,7 @@ object RelevanceFunctions {
     val base0 = df.select(col(idCol).as("_id"),
         split(lower(trim(col(textCol))), "\\s+").as("_toks"))
       .withColumn("_dl", size(col("_toks")).cast("long"))
-    val base = if (storage != StorageLevel.NONE)
-      graft.Caches.trackedPersist(base0, storage) else base0
+    val base = graft.Caches.trackedPersist(base0, storage)
     val statCols =
       count(lit(1)).as("_n") +: sum(col("_dl")).as("_sumdl") +:
         terms.zipWithIndex.map { case (t, i) =>
@@ -607,8 +602,7 @@ object RelevanceFunctions {
       .select(col("_id"), col("_e.term").as("term"),
         col("_e.tf").as("tf"), col("_e.score").as("score"))
       .withColumn("rel", least(col("tf"), lit(relCap.toLong)))
-    val long = if (storage != StorageLevel.NONE)
-      graft.Caches.trackedPersist(long0, storage) else long0
+    val long = graft.Caches.trackedPersist(long0, storage)
     def dcgTerm: Column = round(
       (pow(lit(2.0), col("rel")) - 1) / log2(col("pos") + 1), 6)
       .cast("decimal(18,6)")

@@ -868,7 +868,7 @@ object SimilarityFunctions {
     val rows = nBits / bands
     val sig = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("sig", hyperplaneSignature(col("v"), dim, nBits, seed))
-    if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(sig, storage)
+    graft.Caches.trackedPersist(sig, storage)
     // rows == 64 would make (1L << 64) - 1 wrap to 0 (Java shifts mod 64)
     val mask = if (rows == 64) -1L else (1L << rows) - 1
     val banded = sig.select(col("id"), explode(array((0 until bands).map(b =>
@@ -914,7 +914,7 @@ object SimilarityFunctions {
     def sig(df: DataFrame): DataFrame = {
       val s = df.select(col(idCol).as("id"), col(vecCol).as("v"))
         .withColumn("sig", hyperplaneSignature(col("v"), dim, nBits, seed))
-      if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(s, storage)
+      graft.Caches.trackedPersist(s, storage)
       s
     }
     def banded(s: DataFrame): DataFrame =
@@ -985,7 +985,7 @@ object SimilarityFunctions {
       broadcastBatchSide: Boolean = true): DataFrame = {
     // batch vectors feed the signature projection AND the verify join
     val vb = incoming.select(col(idCol).as("id"), col(vecCol).as("v"))
-    if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(vb, storage)
+    graft.Caches.trackedPersist(vb, storage)
     val batchBands0 = hyperplaneBands(vb, dim, nBits, bands, "id", "v", seed)
     val batchBands = if (broadcastBatchSide) broadcast(batchBands0) else batchBands0
     val cands0 = existingBands.as("x").join(batchBands.as("y"), Seq("band", "key"))
@@ -1082,7 +1082,7 @@ object SimilarityFunctions {
           (best, id, v)
         }
       }.toDF("cluster_id", "id", "v")
-    if (storage != StorageLevel.NONE) graft.Caches.trackedPersist(assigned, storage)
+    graft.Caches.trackedPersist(assigned, storage)
     val cands = graft.ops.SkewOps.selfPairJoin(
       assigned.select(col("cluster_id"), col("id")), Seq("cluster_id"), "id",
       hotClusterThreshold, salts)

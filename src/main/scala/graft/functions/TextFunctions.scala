@@ -757,9 +757,7 @@ object TextFunctions {
   def selfBleu2(df: DataFrame, idCol: String, textCol: String,
       storage: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    def pinned(d: DataFrame): DataFrame =
-      if (storage != org.apache.spark.storage.StorageLevel.NONE)
-        graft.Caches.trackedPersist(d, storage) else d
+    def pinned(d: DataFrame): DataFrame = graft.Caches.trackedPersist(d, storage)
     val toks = df.select(col(idCol),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("_g"))
       .filter(length(col("_g")) > 0)

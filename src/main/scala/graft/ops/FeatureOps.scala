@@ -101,10 +101,9 @@ object FeatureOps {
     // `df` feeds BOTH the span aggregation and the observation join —
     // without pinning, its whole lineage (often an aggregation itself)
     // runs twice. StorageLevel.NONE disables for callers that manage
-    // materialization themselves; long-lived sessions reclaim the blocks
-    // via [[graft.Caches.releaseAll]].
-    if (storage != org.apache.spark.storage.StorageLevel.NONE)
-      graft.Caches.trackedPersist(df, storage)
+    // materialization themselves; the pin is released when the caller's
+    // [[graft.Caches.scoped]] block closes.
+    graft.Caches.trackedPersist(df, storage)
     val spans = df.groupBy(col(entity))
       .agg(min(col(time)).as("_d0"), max(col(time)).as("_d1"))
     val calendar = spans
@@ -147,8 +146,7 @@ object FeatureOps {
       value: String,
       storage: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    if (storage != org.apache.spark.storage.StorageLevel.NONE)
-      graft.Caches.trackedPersist(df, storage)
+    graft.Caches.trackedPersist(df, storage)
     val spans = df.groupBy(col(entity))
       .agg(min(col(time)).as("_d0"), max(col(time)).as("_d1"))
     val calendar = spans

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -34,6 +34,16 @@ object GraphOps {
   private def pinWidth(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
+  /** The canonical undirected edge set: `(u, v)` as longs with u < v,
+    * null endpoints and self-loops dropped, duplicates collapsed.
+    */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
+      .distinct()
+
   /** PageRank over DIRECTED edges, `iterations` synchronous rounds of
     *
     *   r'(v) = (1 − d)/n + d · Σ_{(u,v) ∈ E} r(u)/outdeg(u)
@@ -60,67 +70,11 @@ object GraphOps {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, damping: Double = 0.85,
-      roundTo: Int = 6): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1 (got $iterations)")
-    require(damping > 0.0 && damping < 1.0, s"damping must be in (0, 1) (got $damping)")
-
-    def rnd(c: org.apache.spark.sql.Column) =
-      if (roundTo >= 0) round(c, roundTo) else c
-
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .repartition(pinWidth(edges), col("src")) // absorbed by the distinct's aggregate
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      // broadcast deg join preserves e's src clustering — withDeg stays
-      // keyed for the per-round join without a second exchange
-      val withDeg = e.join(deg, "src")
-        .select(col("src"), col("dst"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = nodes.count().toDouble
-        val base = (1.0 - damping) / n
-        // the FINAL rank frame outlives this call — it rides the
-        // session-wide tracked-pin registry (Caches.releaseAll) like
-        // every operator-internal pin; superseded rounds are released
-        // manually as soon as their successor materializes
-        var ranks = graft.Caches.trackedPersist(
-          nodes.select(col("node"), rnd(lit(1.0 / n)).as("rank")),
-          StorageLevel.MEMORY_AND_DISK)
-        var prev: Option[DataFrame] = None
-        var i = 0
-        while (i < iterations) {
-          val contribs = withDeg
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(col("dst").as("node"))
-            .agg(sum(col("rank") / col("deg")).as("_s"))
-          val next = graft.Caches.trackedPersist(
-            nodes
-              .join(contribs, Seq("node"), "left")
-              .select(col("node"),
-                rnd(lit(base) + lit(damping) * coalesce(col("_s"), lit(0.0))).as("rank")),
-            StorageLevel.MEMORY_AND_DISK)
-          next.count() // materialize before releasing the round it read
-          prev.foreach(_.unpersist(blocking = false))
-          prev = Some(ranks)
-          ranks = next
-          i += 1
-        }
-        prev.foreach(_.unpersist(blocking = false))
-        ranks.orderBy("node")
-      } finally {
-        withDeg.unpersist(blocking = false)
-        nodes.unpersist(blocking = false)
-      }
-    } finally e.unpersist(blocking = false)
-  }
+      roundTo: Int = 6): DataFrame =
+    rankRounds(edges, srcCol, dstCol, iterations, damping, roundTo) { nodes =>
+      val n = nodes.count().toDouble
+      (lit(1.0 / n), lit((1.0 - damping) / n))
+    }
 
   /** PERSONALIZED PageRank (Haveliwala, WWW 2002): [[pageRank]]'s
     * recurrence with the teleport mass concentrated on a seed set S
@@ -144,16 +98,24 @@ object GraphOps {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[Long], iterations: Int = 5, damping: Double = 0.85,
       roundTo: Int = 6): DataFrame = {
+    require(seeds.nonEmpty, "personalizedPageRank needs at least one seed node")
+    val p = when(col("node").isin(seeds: _*), lit(1.0 / seeds.size)).otherwise(lit(0.0))
+    rankRounds(edges, srcCol, dstCol, iterations, damping, roundTo)(
+      _ => (p, lit(1.0 - damping) * p))
+  }
+
+  /** The round loop [[pageRank]] and [[personalizedPageRank]] share:
+    * `init(nodes)` gives the initial rank and the teleport term, both
+    * over `col("node")`, and each round computes
+    * `teleport + d · Σ r(u)/outdeg(u)`, rounded to `roundTo` dp.
+    */
+  private def rankRounds(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int, damping: Double, roundTo: Int)(
+      init: DataFrame => (Column, Column)): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1 (got $iterations)")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0, 1) (got $damping)")
-    require(seeds.nonEmpty, "personalizedPageRank needs at least one seed node")
 
-    def rnd(c: org.apache.spark.sql.Column) =
-      if (roundTo >= 0) round(c, roundTo) else c
-
-    val pSeed = 1.0 / seeds.size
-    def pv(node: org.apache.spark.sql.Column) =
-      when(node.isin(seeds: _*), lit(pSeed)).otherwise(lit(0.0))
+    def rnd(c: Column) = if (roundTo >= 0) round(c, roundTo) else c
 
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
@@ -173,8 +135,13 @@ object GraphOps {
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
+        val (initial, teleport) = init(nodes)
+        // the FINAL rank frame outlives this call — it is released
+        // with the caller's Caches.scoped block like every
+        // operator-internal pin; superseded rounds are released
+        // manually as soon as their successor materializes
         var ranks = graft.Caches.trackedPersist(
-          nodes.select(col("node"), rnd(pv(col("node"))).as("rank")),
+          nodes.select(col("node"), rnd(initial).as("rank")),
           StorageLevel.MEMORY_AND_DISK)
         var prev: Option[DataFrame] = None
         var i = 0
@@ -187,10 +154,9 @@ object GraphOps {
             nodes
               .join(contribs, Seq("node"), "left")
               .select(col("node"),
-                rnd(lit(1.0 - damping) * pv(col("node")) +
-                  lit(damping) * coalesce(col("_s"), lit(0.0))).as("rank")),
+                rnd(teleport + lit(damping) * coalesce(col("_s"), lit(0.0))).as("rank")),
             StorageLevel.MEMORY_AND_DISK)
-          next.count()
+          next.count() // materialize before releasing the round it read
           prev.foreach(_.unpersist(blocking = false))
           prev = Some(ranks)
           ranks = next
@@ -295,12 +261,7 @@ object GraphOps {
     * hash agg. No windows, no driver collect.
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val deg = e.select(col("u").as("node")).unionByName(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -333,7 +294,7 @@ object GraphOps {
             .groupBy("node").agg(count(lit(1)).as("triangles"))
           // pin + materialize the node-cardinality result while the
           // edge/wedge lineage is still live, then drop the internals;
-          // the pin rides the session-wide registry (Caches.releaseAll)
+          // the pin is released with the caller's Caches.scoped block
           val out = graft.Caches.trackedPersist(
             deg.join(perNode, Seq("node"), "left")
               .select(col("node"), col("deg"),
@@ -371,12 +332,7 @@ object GraphOps {
     * [[triangleCounts]], all equi-joins and hash aggs, no windows.
     */
   def neighborJaccard(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val sym = e.select(col("u").as("a"), col("v").as("b"))
         .unionByName(e.select(col("v").as("a"), col("u").as("b")))
@@ -437,12 +393,7 @@ object GraphOps {
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val sym = e.select(col("u").as("a"), col("v").as("b"))
         .unionByName(e.select(col("v").as("a"), col("u").as("b")))
@@ -459,7 +410,7 @@ object GraphOps {
           .agg(count(lit(1)).as("cn"))
         // pin + materialize the k-row result while the wedge lineage is
         // still cached, then drop the internals (the neighborJaccard
-        // convention); the pin rides the session registry
+        // convention); the pin is released with the caller's scope
         val out = graft.Caches.trackedPersist(
           cand
             .join(deg.select(col("node").as("u"), col("deg").as("deg_u")), "u")
@@ -507,12 +458,7 @@ object GraphOps {
       k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
-    var e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    var e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
     var i = 0
     while (i < rounds) {
       val deg = e.select(col("u").as("node"))
@@ -639,11 +585,7 @@ object GraphOps {
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val e = undirected(edges, srcCol, dstCol)
     val dir = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
     val deg = dir.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -698,12 +640,7 @@ object GraphOps {
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 3,
       s"rounds must be in 1..3 (sixths transport; got $rounds)")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val dir = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
         .repartition(pinWidth(e), col("u"))
@@ -766,12 +703,7 @@ object GraphOps {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val dir = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
         .repartition(pinWidth(e), col("u"))

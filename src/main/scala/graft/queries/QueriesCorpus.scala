@@ -1477,7 +1477,7 @@ QueryDef("c12_classifier_gated_clean",
         // scored feeds BOTH the median aggregate and the gating join —
         // unpinned, the whole NB scoring chain (tokenize + hash +
         // weights join over every doc) executed twice (r15 pin, the
-        // multi-consumer rule; released via Caches.releaseAll)
+        // multi-consumer rule; released with the caller's Caches.scoped)
         val scored = graft.Caches.trackedPersist(
           Cls.scoreLinear(d, "doc_id", "text", w, bias,
             buckets = 1 << 16, hash = D.md5Hash60),

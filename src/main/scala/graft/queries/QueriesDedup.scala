@@ -1303,7 +1303,7 @@ QueryDef("d29_lsh_recall",
         // truth feeds its count AND the anti-join; pred feeds its count
         // AND the anti-join — unpinned, each pair pipeline (prefix-
         // filter join / banded LSH join) executed twice (r15 pin, the
-        // multi-consumer rule; released via Caches.releaseAll)
+        // multi-consumer rule; released with the caller's Caches.scoped)
         val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val truth = graft.Caches.trackedPersist(
           D.prefixJaccardPairs(docs(s, dir), "doc_id", "text",

@@ -125,8 +125,7 @@ QueryDef("e6_interval_join",
         // purchases feeds BOTH the interval join (exploded into cells)
         // and the zero-click left join — pin so the events scan +
         // filter + interval arithmetic run once, not twice; the tracked
-        // persist lets a long-lived session reclaim the blocks via
-        // graft.Caches.releaseAll() (Bench/Verify clearCache() also works)
+        // persist is released with the caller's graft.Caches.scoped block
         val purchases = graft.Caches.trackedPersist(
           ev.filter(col("event_type") === "purchase")
             .select(col("user_id"), col("event_id").as("purchase_id"),

@@ -5,8 +5,9 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
+import graft.Caches.trackedPersist
 import graft.ops.{CrossValidationOps, FeatureOps, MacroOps, ValidationOps}
 import graft.output.{Clock, Json, OutputManager, SystemClock}
 import graft.warehouse.Warehouse
@@ -60,8 +61,9 @@ final case class RunResult(
   * Each source is read once: the primary slice, its cleaned frame, the
   * comparison, the macro frame and the enriched result are persisted at
   * the boundary — the first branch to reach one materializes it for all —
-  * and released when the request ends. The forked branches run on a
-  * per-request pool with one thread per branch.
+  * and released when the request ends: `run` is one `Caches.scoped`
+  * block, and the branch threads it starts pin into the same scope. The
+  * forked branches run on a per-request pool with one thread per branch.
   *
   * One-writer-per-table rule: no two branches that can run at once write
   * the same table or file; the request_log terminal write waits for the
@@ -163,7 +165,7 @@ final class RequestRunner(
       req: Request,
       primary: DataFrame,
       secondary: Option[DataFrame] = None,
-      macroData: Option[DataFrame] = None): RunResult = {
+      macroData: Option[DataFrame] = None): RunResult = graft.Caches.scoped {
     val requestId = generateRequestId(req)
     // per-request error count (the execution log's error summary stays
     // tracker-lifetime cumulative, matching the reference's logger-scoped
@@ -173,12 +175,6 @@ final class RequestRunner(
     // started log, validation report, market append, result CSV + the
     // optional macro and discrepancy branches: one thread each
     val branches = new Branches(4 + macroData.size + cross.size, s"graft-request-$requestId")
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // a frame the caller already cached stays the caller's to release
-    def pin(df: DataFrame): DataFrame = {
-      if (df.storageLevel == StorageLevel.NONE) { df.persist(); pinned += df }
-      df
-    }
     try {
       branches.fork(writeRequestLog(requestId, req, "started"))
 
@@ -187,7 +183,7 @@ final class RequestRunner(
       // matches the reference's 5-column DDL; enrichWithCatalog is
       // idempotent (adds only missing columns), so every batch lands on
       // the same schema
-      val macroBranch = macroData.map(pin).map { m =>
+      val macroBranch = macroData.map(trackedPersist(_, MEMORY_AND_DISK)).map { m =>
         branches.fork {
           val profile = MacroOps.seriesProfile(m).collect()
             .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
@@ -203,26 +199,28 @@ final class RequestRunner(
       // is nondeterministic across plan re-evaluations (shuffle fetch
       // order), so pin ONE dedup outcome for every downstream action
       // (report aggregates, warehouse, CSV)
-      val slice = pin(primary)
-      val clean = pin(FeatureOps.keepLast(
+      val slice = trackedPersist(primary, MEMORY_AND_DISK)
+      val clean = trackedPersist(FeatureOps.keepLast(
         slice.withColumn("_seq", monotonically_increasing_id()), Seq("ticker", "date"), "_seq")
-        .drop("_seq"))
+        .drop("_seq"), MEMORY_AND_DISK)
       val basicBranch = branches.fork(validateBasic(slice, clean))
       val features = FeatureOps.transform(clean)
 
       // 3. optional cross-validation (J-1, P-6..P-8, J-2)
       val compared = cross.map { sec =>
-        val cmp = pin(CrossValidationOps.compareSources(clean, sec, "ticker", "date", req.tolerancePct))
+        val cmp = trackedPersist(
+          CrossValidationOps.compareSources(clean, sec, "ticker", "date", req.tolerancePct),
+          MEMORY_AND_DISK)
         val summary = CrossValidationOps.reconciliationSummary(cmp)
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
         (cmp, summary)
       }
-      val enriched = pin(compared match {
+      val enriched = trackedPersist(compared match {
         case Some((cmp, _)) =>
           CrossValidationOps.enrichWithFlags(features,
             cmp.select(col("ticker"), col("date"), col("discrepancy_flag")), "ticker", "date")
         case None => features.withColumn("discrepancy_flag", lit(false))
-      })
+      }, MEMORY_AND_DISK)
 
       // 5. store (K-2/K-3 dedup append, K-4 upsert). Both warehouse tables
       // are hive-partitioned on their entity key, so the append's
@@ -319,7 +317,6 @@ final class RequestRunner(
     } finally {
       branches.close()
       errorsAccounted = trackedErrors
-      pinned.foreach(_.unpersist())
     }
   }
 }

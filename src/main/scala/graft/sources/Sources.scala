@@ -46,7 +46,7 @@ final class JsonSource(path: String, schema: StructType) extends Source {
   * both outputs branch from one scan — also required: Spark refuses
   * queries that select ONLY the corrupt column from a raw JSON scan
   * (SPARK-21610), and the cache boundary is the documented workaround.
-  * Release via [[graft.Caches.releaseAll]].
+  * Released when the caller's [[graft.Caches.scoped]] block closes.
   */
 object JsonlCorpus {
   val corruptCol = "_corrupt_record"

@@ -182,10 +182,9 @@ object PropertySpec extends Properties("graft") {
       Gen.zip(Gen.choose(1L, 6L), Gen.choose(1L, 6L))))) { edges =>
       val valid = edges.exists(e => e._1 != e._2)
       !valid || {
-        val r = graft.ops.GraphOps
+        val r = graft.Caches.scoped(graft.ops.GraphOps
           .pageRank(edges.toDF("s", "d"), "s", "d", iterations = 2)
-          .select("rank").as[Double].collect()
-        graft.Caches.releaseAll()
+          .select("rank").as[Double].collect())
         // each node's rank rounds (HALF_UP) to 6 dp per round, so the
         // exact ≤1 mass bound relaxes by up to 5e-7 per node
         r.forall(_ > 0.0) && r.sum <= 1.0 + r.length * 5e-7 + 1e-9

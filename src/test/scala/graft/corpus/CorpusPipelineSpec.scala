@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.functions.TextFunctions
 
-class CorpusPipelineSpec extends AnyFunSuite {
+class CorpusPipelineSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -90,7 +90,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
         buckets = 1 << 12)))
     assert(CorpusPipeline.clean(spam, "doc_id", "text", cfgC)
       .select("doc_id").as[Long].collect().toSet === Set(1L))
-    graft.Caches.releaseAll()
   }
 
   test("clean + lineDedupMinChars: re-crawls differing only in banner placement collapse") {
@@ -121,7 +120,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(!onRows.exists(_._1 >= 100000L), "every re-crawl must collapse")
     val withBanner = onRows.filter(_._2.contains(banner)).map(_._1).toSeq
     assert(withBanner === Seq(0L), s"banner must survive only in doc 0, got $withBanner")
-    graft.Caches.releaseAll()
   }
 
   test("clean + semantic stage: embedding near-dups drop, verified brute-force") {
@@ -196,7 +194,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // docs with no chunk embeddings pass through the semantic tier intact
     assert(preIds.filter(_ >= 50L).filterNot(Set(900010L, 900011L))
       .subsetOf(postIds))
-    graft.Caches.releaseAll()
   }
 
   test("clean + holdout: exactly the contaminated survivors drop, nothing else") {
@@ -218,7 +215,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(baseIds -- deconIds === contaminated)
     assert(contaminated.nonEmpty, "fixture sanity: some overlap must exist")
-    graft.Caches.releaseAll()
   }
 
   test("clean + holdoutChunks: pooled-cosine matches against the eval suite drop") {
@@ -264,7 +260,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .select(col("x.doc_id")).as[Long].collect().toSet
     assert(offIds -- onIds === expectedDrops)
     assert(expectedDrops === Set(7L), s"fixture sanity: got $expectedDrops")
-    graft.Caches.releaseAll()
   }
 
   test("clean rejects holdoutChunks without the semantic tier") {
@@ -312,7 +307,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val grown = existing.unionByName(survivors).localCheckpoint(true)
     val again = CorpusPipeline.appendBatch(grown, batch, "doc_id", "text", cfg)
     assert(again.isEmpty, "appending the same batch twice must add zero rows")
-    graft.Caches.releaseAll()
   }
 
   test("appendBatchIndexed: a parquet round-tripped index reproduces the direct append") {
@@ -343,7 +337,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(viaIndex === direct)
     assert(!viaIndex.contains(900300L), "re-crawled copy drops through the stored index")
-    graft.Caches.releaseAll()
   }
 
   test("appendBatchIndexed: the Bloom gate is result-transparent, even saturated") {
@@ -376,7 +369,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
         "text", cfg, fpBloom = Some(saturated))
       .select("doc_id").as[Long].collect().toSet
     assert(viaSaturated === plain)
-    graft.Caches.releaseAll()
   }
 
   test("appendBatchIndexed plan: bloom-armed exact tier never SHUFFLES the fingerprint index") {
@@ -391,7 +383,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("bloom-plan").toFile.getAbsolutePath
     val idx = CorpusPipeline.buildTextIndex(existing, "doc_id", "text", cfg)
     idx.fingerprints.write.parquet(s"$dir/fp")
-    graft.Caches.releaseAll()
     val fpIndex = spark.read.parquet(s"$dir/fp")
     val bloom = graft.functions.DedupFunctions.fingerprintBloom(
       fpIndex, "fp", expectedItems = 100000L)
@@ -436,7 +427,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abtWas)
-      graft.Caches.releaseAll()
     }
   }
 
@@ -539,14 +529,15 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val cfg = CorpusConfig(minTokens = 15, minQuality = 50.0)
-    val existing = CorpusPipeline.clean(
-      docs.filter(col("doc_id") < 25), "doc_id", "text", cfg)
-    val idx = CorpusPipeline.buildTextIndex(existing, "doc_id", "text", cfg)
     val dir = Files.createTempDirectory("corpus-index-plan").toFile.getAbsolutePath
-    idx.fingerprints.write.parquet(s"$dir/fp")
-    idx.shingles.write.parquet(s"$dir/sh")
-    idx.bands.write.parquet(s"$dir/bd")
-    graft.Caches.releaseAll() // drop build-time pins so plans show raw scans
+    graft.Caches.scoped { // drop build-time pins so plans show raw scans
+      val existing = CorpusPipeline.clean(
+        docs.filter(col("doc_id") < 25), "doc_id", "text", cfg)
+      val idx = CorpusPipeline.buildTextIndex(existing, "doc_id", "text", cfg)
+      idx.fingerprints.write.parquet(s"$dir/fp")
+      idx.shingles.write.parquet(s"$dir/sh")
+      idx.bands.write.parquet(s"$dir/bd")
+    }
     val loaded = CorpusPipeline.TextIndex(
       spark.read.parquet(s"$dir/fp"), spark.read.parquet(s"$dir/sh"),
       spark.read.parquet(s"$dir/bd"))
@@ -593,7 +584,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       case a: Aggregate if a.children.exists(reachesWithoutJoin) => a
     }
     assert(oldBad.nonEmpty, "detector sanity: the derived path recomputes signatures")
-    graft.Caches.releaseAll()
   }
 
   test("appendBatchIndexed: a parquet round-tripped SemanticIndex reproduces the re-pooling path") {
@@ -636,7 +626,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       existing.select(col("doc_id")), realChunks, "doc_id", "embedding", semCfg)
     sIdx.vectors.write.parquet(s"$dir/vec")
     sIdx.bands.write.parquet(s"$dir/vbd")
-    graft.Caches.releaseAll()
     val viaIndex = CorpusPipeline.appendBatchIndexed(
         CorpusPipeline.TextIndex(spark.read.parquet(s"$dir/fp"),
           spark.read.parquet(s"$dir/sh"), spark.read.parquet(s"$dir/bd")),
@@ -647,7 +636,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(viaIndex === direct,
       "index-fed semantic append must equal the re-pooling path row-for-row")
-    graft.Caches.releaseAll()
   }
 
   test("appendBatchIndexed plan: corpus chunks NEVER scanned; stored vectors join-only") {
@@ -657,23 +645,26 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     val cfg = CorpusConfig(minTokens = 15, minQuality = 0.0)
     val semCfg = SemanticConfig(dim = 64, minCosine = 0.9)
-    val existing = CorpusPipeline.clean(
-      docs.filter(col("doc_id") < 25), "doc_id", "text", cfg)
     // corpus chunks as PARQUET so a scan of them is detectable by path
     val dir = Files.createTempDirectory("semantic-plan").toFile.getAbsolutePath
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(expr("vec_id div 10").as("doc_id"), col("embedding"))
       .write.parquet(s"$dir/chunks")
     val exChunks = spark.read.parquet(s"$dir/chunks")
-    val tIdx = CorpusPipeline.buildTextIndex(existing, "doc_id", "text", cfg)
-    tIdx.fingerprints.write.parquet(s"$dir/fp")
-    tIdx.shingles.write.parquet(s"$dir/sh")
-    tIdx.bands.write.parquet(s"$dir/bd")
-    val sIdx = CorpusPipeline.buildSemanticIndex(
-      existing.select(col("doc_id")), exChunks, "doc_id", "embedding", semCfg)
-    sIdx.vectors.write.parquet(s"$dir/vec")
-    sIdx.bands.write.parquet(s"$dir/vbd")
-    graft.Caches.releaseAll()
+    // build-time pins are dropped when this scope closes
+    val existing = graft.Caches.scoped {
+      val existing = CorpusPipeline.clean(
+        docs.filter(col("doc_id") < 25), "doc_id", "text", cfg)
+      val tIdx = CorpusPipeline.buildTextIndex(existing, "doc_id", "text", cfg)
+      tIdx.fingerprints.write.parquet(s"$dir/fp")
+      tIdx.shingles.write.parquet(s"$dir/sh")
+      tIdx.bands.write.parquet(s"$dir/bd")
+      val sIdx = CorpusPipeline.buildSemanticIndex(
+        existing.select(col("doc_id")), exChunks, "doc_id", "embedding", semCfg)
+      sIdx.vectors.write.parquet(s"$dir/vec")
+      sIdx.bands.write.parquet(s"$dir/vbd")
+      existing
+    }
     def scansPath(sub: String)(p: LogicalPlan): Boolean = p match {
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation =>
@@ -690,17 +681,16 @@ class CorpusPipelineSpec extends AnyFunSuite {
       }
     val batch = docs.filter(col("doc_id") >= 25)
     val batchChunks = exChunks.filter(col("doc_id") >= 25)
-    val indexed = CorpusPipeline.appendBatchIndexed(
+    // the scope drops the pipeline's internal pins BEFORE the plan is
+    // resolved — cache substitution would otherwise bury scans inside
+    // InMemoryRelation leaves the logical traversal cannot enter
+    val indexed = graft.Caches.scoped(CorpusPipeline.appendBatchIndexed(
       CorpusPipeline.TextIndex(spark.read.parquet(s"$dir/fp"),
         spark.read.parquet(s"$dir/sh"), spark.read.parquet(s"$dir/bd")),
       batch, "doc_id", "text", cfg,
       semanticIndex = Some(CorpusPipeline.SemanticIndex(
         spark.read.parquet(s"$dir/vec"), spark.read.parquet(s"$dir/vbd"))),
-      batchChunks = Some(batchChunks), semantic = Some(semCfg))
-    // drop the pipeline's internal pins BEFORE resolving the plan —
-    // cache substitution would otherwise bury scans inside
-    // InMemoryRelation leaves the logical traversal cannot enter
-    graft.Caches.releaseAll()
+      batchChunks = Some(batchChunks), semantic = Some(semCfg)))
     val plan = indexed.queryExecution.optimizedPlan
     assert(plan.exists(scansPath("vec")),
       "stored pooled vectors must appear (cosine verification reads them)")
@@ -730,11 +720,10 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // positive control: the DERIVED path (appendBatch with the corpus
     // chunk frame) reads the corpus chunks — proves the absence above
     // is the index's doing, not the detector's blindness
-    val derived = CorpusPipeline.appendBatch(
+    val derived = graft.Caches.scoped(CorpusPipeline.appendBatch( // same un-pinning
       existing, batch, "doc_id", "text", cfg,
       existingChunks = Some(exChunks), batchChunks = Some(batchChunks),
-      semantic = Some(semCfg))
-    graft.Caches.releaseAll() // same un-pinning, same reason
+      semantic = Some(semCfg)))
     assert(unfilteredChunkScan(derived.queryExecution.optimizedPlan),
       "detector sanity: the derived path scans the corpus chunk table")
   }
@@ -773,7 +762,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       CorpusPipeline.appendBatch(existing, plant, "doc_id", "text", cfg,
         existingChunks = Some(realChunks))
     }
-    graft.Caches.releaseAll()
   }
 
   test("ingest containment tier: a night-2 excerpt of a night-1 doc drops; stored winnow state, never re-winnowed") {
@@ -818,7 +806,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .filter(col("doc_id") === 900500L).count() === 1L,
       "without the tier the excerpt sails through every symmetric stage")
     assert(CorpusPipeline.readTextIndex(spark, state2).winnow.isEmpty)
-    graft.Caches.releaseAll()
   }
 
   test("ingest: seeds state, extends it, and re-ingesting a batch is a no-op") {
@@ -896,7 +883,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
   test("ingest releases every block it pins, the armed skew split's included") {
     val sc = spark.sparkContext
     val state = Files.createTempDirectory("ingest-release").toFile.getAbsolutePath
-    graft.Caches.releaseAll()
     val baseline = sc.getPersistentRDDs.keySet
     // the default config arms the skew split, so both nights pin its
     // frames; the peak shows blocks were held while a night ran
@@ -916,6 +902,43 @@ class CorpusPipelineSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     assert(peak.get() > 0, "ingest should have pinned frames while it ran")
+  }
+
+  test("two tenants: B's ingest on either thread never releases A's lazy checkpoint-backed append") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val cfg = CorpusConfig(minTokens = 15, minQuality = 50.0)
+    // tenant A: a stored text index of the first 25 docs
+    val dirA = Files.createTempDirectory("tenant-a").toFile.getAbsolutePath
+    graft.Caches.scoped {
+      val idx = CorpusPipeline.buildTextIndex(CorpusPipeline.clean(
+        docs.filter(col("doc_id") < 25), "doc_id", "text", cfg), "doc_id", "text", cfg)
+      idx.fingerprints.write.parquet(s"$dirA/fp")
+      idx.shingles.write.parquet(s"$dirA/sh")
+      idx.bands.write.parquet(s"$dirA/bd")
+    }
+    def append() = CorpusPipeline.appendBatchIndexed(
+      CorpusPipeline.TextIndex(spark.read.parquet(s"$dirA/fp"),
+        spark.read.parquet(s"$dirA/sh"), spark.read.parquet(s"$dirA/bd")),
+      docs.filter(col("doc_id") >= 25 && col("doc_id") < 120), "doc_id", "text", cfg)
+    val expected = graft.Caches.scoped(append().select("doc_id").as[Long].collect().toSet)
+    assert(expected.nonEmpty, "fixture sanity: the append keeps some docs")
+    // A's lazy result reads the stage checkpoints of this test's open scope
+    val held = append()
+    // tenant B: two nights on its own state dir, on this thread and then
+    // on a second one
+    val stateB = Files.createTempDirectory("tenant-b").toFile.getAbsolutePath
+    val nights = twoNights
+    CorpusPipeline.ingest(spark, stateB, nights.head)
+    var failure: Option[Throwable] = None
+    val tenantB = new Thread(() =>
+      try { CorpusPipeline.ingest(spark, stateB, nights(1)); () }
+      catch { case e: Throwable => failure = Some(e) })
+    tenantB.start()
+    tenantB.join()
+    failure.foreach(throw _)
+    assert(held.count() === expected.size.toLong)
+    assert(held.select("doc_id").as[Long].collect().toSet === expected)
   }
 
   test("clean plan: MinHash signatures and the (band, bucket) histogram are each planned once") {
@@ -939,7 +962,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
         a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Count]))
     assert(signatures === 1, "MinHash signature aggregations in the plan")
     assert(histograms === 1, "(band, bucket) count aggregations in the plan")
-    graft.Caches.releaseAll()
   }
 
   test("ingest crash recovery: uncommitted orphans are invisible; replay converges") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class ClassifierFunctionsSpec extends AnyFunSuite {
+class ClassifierFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
   val spark = TestSpark.spark
   import spark.implicits._
 
@@ -69,7 +69,6 @@ class ClassifierFunctionsSpec extends AnyFunSuite {
     }
     assert(loss(m1, b1) < loss(w0.as[(Long, Double)].collect().toMap, b0),
       "15 iters must beat 1 iter on separable data")
-    graft.Caches.releaseAll()
   }
 
   test("trainLogisticDense: deterministic, loss-improving, learns a separating weight") {

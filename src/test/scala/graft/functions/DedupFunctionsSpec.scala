@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class DedupFunctionsSpec extends AnyFunSuite {
+class DedupFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -89,7 +89,6 @@ class DedupFunctionsSpec extends AnyFunSuite {
         .as[(Long, Long, Double)].collect().toSet
       assert(pref === full, s"threshold $t: prefix join diverged from exhaustive join")
     }
-    graft.Caches.releaseAll()
   }
 
   test("prefixJaccardPairs: planted near-dups, exact scores, invariance") {
@@ -112,7 +111,6 @@ class DedupFunctionsSpec extends AnyFunSuite {
     val b = DedupFunctions.prefixJaccardPairs(boiler, "doc_id", "text",
       n = 2, threshold = 0.9)
     assert(b.count() === 3L)
-    graft.Caches.releaseAll()
   }
 
   test("minhashLshPairs surfaces the planted near-dup and exact dup") {
@@ -224,7 +222,6 @@ class DedupFunctionsSpec extends AnyFunSuite {
     val minId = DedupFunctions.dropNearDuplicateClusters(docs, pairs, "id")
       .select("id").as[Long].collect().toSet
     assert(minId === Set(1L, 10L, 20L, 99L))
-    graft.Caches.releaseAll()
   }
 
   test("fingerprintBloom + BloomMightContain: no false negatives, merged batches covered") {
@@ -327,7 +324,6 @@ class DedupFunctionsSpec extends AnyFunSuite {
         pairs.toSeq.toDF("id_a", "id_b", "jaccard"), "id")
       .select("id").as[Long].collect().toSet
     assert(kept === Set(101L, 7L, 9L))
-    graft.Caches.releaseAll()
   }
 
   test("minhashLshPairsAgainstIndexed: stored bands reproduce the derived path") {
@@ -355,7 +351,6 @@ class DedupFunctionsSpec extends AnyFunSuite {
       assert(viaIndex === derived, s"broadcastBatchSide=$bc")
       assert(viaIndex.map(p => (p._1, p._2)) === Set((100L, 5L)))
     }
-    graft.Caches.releaseAll()
   }
 
   test("crossSplitLeakage: straddling pairs surface with labels, same-split pairs drop") {
@@ -558,6 +553,5 @@ class DedupFunctionsSpec extends AnyFunSuite {
       (3L, "same same same")).toDF("doc_id", "text")
     assert(DedupFunctions.containmentPairs(boiler, "doc_id", "text",
       threshold = 0.5, maxDocFreq = 2).isEmpty)
-    graft.Caches.releaseAll()
   }
 }

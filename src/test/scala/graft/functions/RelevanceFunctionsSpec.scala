@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class RelevanceFunctionsSpec extends AnyFunSuite {
+class RelevanceFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -100,7 +100,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
       spark.createDataset(Seq(
         (1L, "apple banana apple"), (2L, "banana cherry"), (3L, "durian durian")))
         .map { r => acc.add(1L); r }.toDF("doc_id", "text")
-    graft.Caches.releaseAll()
     val accB = spark.sparkContext.longAccumulator("bm25_scans")
     RelevanceFunctions.bm25(countingCorpus(accB), "doc_id", "text", Seq("banana"))
       .collect()
@@ -112,7 +111,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
     // the RAW source by design — ids only, no tokenization); the pinned
     // explode itself contributes exactly one scan.
     assert(accU.value <= 6L, s"unigramLogProb scanned the corpus ${accU.value / 3.0}x")
-    graft.Caches.releaseAll()
   }
 
   test("bigramLogProb: hand-checked conditional probabilities; short docs floor") {
@@ -125,7 +123,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
     assert(math.abs(got(0)._2 - (pab + pba + pab + pbc) / 4.0) < 1e-12)
     assert(math.abs(got(1)._2 - pba) < 1e-12)
     assert(got(2)._2 === -20.0) // one token -> no bigrams -> floored
-    graft.Caches.releaseAll()
   }
 
   test("bigramLogProb catches scrambled word order that the unigram model misses") {
@@ -145,7 +142,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
       .bigramLogProb(df, "doc_id", "text", broadcastVocab = false)
       .orderBy("doc_id").as[(Long, Double)].collect()
     assert(biShuffled === bi)
-    graft.Caches.releaseAll()
   }
 
   test("guards: empty and duplicate term lists are rejected") {
@@ -219,7 +215,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
     val b = RelevanceFunctions.perplexityBuckets(docs.repartition(7), "doc_id", "text")
       .as[(Long, Double, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(b === m)
-    graft.Caches.releaseAll()
   }
 
   test("rrfFuse: both-list items dominate, absent lists contribute zero, ties to lower id") {
@@ -273,7 +268,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
     // capping at maxDf=1 drops every shared token -> no pairs at all
     assert(RelevanceFunctions.tfidfCosinePairs(docs, "doc_id", "text",
       minSim = 0.05, maxDf = 1L).isEmpty)
-    graft.Caches.releaseAll()
   }
 
   test("pmiPairs: hand-checked PMI; df gate cuts hubs and hapax") {
@@ -297,7 +291,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
         minDf = 2L, maxDf = 3L, minPairs = 1L)
       .select("tok_a", "tok_b").as[(String, String)].collect().toSet
     assert(all === Set(("a", "b"), ("a", "c"), ("b", "c")))
-    graft.Caches.releaseAll()
   }
 
   test("pmiPairs: repeated token in one doc counts once (doc frequency)") {
@@ -307,7 +300,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
       .as[(String, String, Long, Long, Long, Double)].collect().toList
     // n=2, x df 2, y df 2, co-occur 2: PMI = ln(2·2/4) = 0
     assert(out === List(("x", "y", 2L, 2L, 2L, 0.0)))
-    graft.Caches.releaseAll()
   }
 
   test("rrfFuse: duplicate id within one list resolves deterministically") {
@@ -411,7 +403,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
       .as[(String, Long, Double, Double, Double)].collect().toList
     assert(out.head === (("q", 0L, 0.0, 0.0, 0.0))) // term absent anywhere
     assert(out(1) === (("x", 2L, 1.0, 1.0, 1.0)))   // retrieved == ideal
-    graft.Caches.releaseAll()
   }
 
   test("rankingMetrics: a bm25-vs-relevance inversion drops NDCG below 1") {
@@ -432,7 +423,6 @@ class RelevanceFunctionsSpec extends AnyFunSuite {
     assert(out._3 === r6d(dcg / idcg) && out._3 < 1.0, s"ndcg ${out._3}")
     assert(out._4 === 1.0) // first retrieved doc IS relevant
     assert(out._5 === 1.0) // both relevant docs retrieved within k
-    graft.Caches.releaseAll()
   }
 
   test("mmrRerank: diversification demotes the near-duplicate of the first pick") {

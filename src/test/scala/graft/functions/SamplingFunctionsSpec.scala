@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class SamplingFunctionsSpec extends AnyFunSuite {
+class SamplingFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -514,7 +514,6 @@ class SamplingFunctionsSpec extends AnyFunSuite {
     // negatives come only from the hash-selected pool (bounded set):
     // at most poolSize distinct neg ids across ALL anchors
     assert(out.map(_._2).distinct.size <= 10)
-    graft.Caches.releaseAll()
   }
 
   test("hashLaplace: deterministic, scales with 1/epsilon, matches the inverse CDF by hand") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class SimilarityFunctionsSpec extends AnyFunSuite {
+class SimilarityFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -121,7 +121,6 @@ class SimilarityFunctionsSpec extends AnyFunSuite {
       "every cluster member pairs with every other")
     assert(plain.exists { case (a, _, _) => a >= 1000L }, "the cold tail pairs too")
     assert(pairs(8L) === plain)
-    graft.Caches.releaseAll()
   }
 
   test("banded LSH recovers planted near-duplicates with recall >= 0.9") {
@@ -677,7 +676,6 @@ class SimilarityFunctionsSpec extends AnyFunSuite {
     // near-pair (900, 901) must NOT appear — no batch self-join runs
     assert(pairs.map(p => (p._1, p._2)).toSet === Set((30L, 3L)), pairs.toSeq.toString)
     assert(pairs.head._3 > 0.99)
-    graft.Caches.releaseAll()
   }
 
   test("lshNeighborPairsAgainstIndexed: stored bands + vectors reproduce the derived path") {
@@ -706,7 +704,6 @@ class SimilarityFunctionsSpec extends AnyFunSuite {
       assert(viaIndex === derived, s"broadcastBatchSide=$bc")
       assert(viaIndex.map(p => (p._1, p._2)) === Set((30L, 3L)))
     }
-    graft.Caches.releaseAll()
   }
 
   test("semanticDedupPairs: pairs only within clusters, ties to lower centroid") {
@@ -744,7 +741,6 @@ class SimilarityFunctionsSpec extends AnyFunSuite {
       threshold = 0.9, hotClusterThreshold = 1L, salts = 4)
       .as[(Long, Long, Double)].collect().toList.sortBy(p => (p._1, p._2))
     assert(salted === pairs)
-    graft.Caches.releaseAll()
   }
 
   test("semanticDedupPairsAgainst: cross-side pairs only — no existing×existing join") {
@@ -1296,6 +1292,5 @@ class SimilarityFunctionsSpec extends AnyFunSuite {
     val srcs = out.map(_.getLong(0))
     assert(srcs.distinct.length === srcs.length, "argmax must emit ≤1 row per source")
     assert(out.forall(_.getDouble(3) >= 1.0))
-    graft.Caches.releaseAll()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class TextFunctionsSpec extends AnyFunSuite {
+class TextFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
 
   test("NfcNormalize + normalizeText: decomposed and precomposed forms converge") {
     val spark2 = TestSpark.spark
@@ -156,7 +156,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(!plan.contains("ENSURE_REQUIREMENTS"),
       s"optimizer-inserted exchange leaked into the plan:\n$plan")
     assert(plan.contains("REPARTITION_BY_COL"))
-    graft.Caches.releaseAll()
   }
 
   test("tokenCount: whitespace tokens; empty and blank → 0") {
@@ -363,7 +362,6 @@ class TextFunctionsSpec extends AnyFunSuite {
       (3L, 2L, 2L, Some(1.0)),
       (4L, 1L, 1L, Some(1.0)),
       (5L, 0L, 0L, None))) // no grams: null novelty, never divide-by-0
-    graft.Caches.releaseAll()
   }
 
   test("ngramNovelty: within-doc repetition counts once (distinct shingles)") {
@@ -376,7 +374,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     // doc1 shingles: xyz yzx zxy (distinct) — all unique to doc1
     assert(out.head === ((1L, 3L, 3L, Some(1.0))))
     assert(out(1) === ((2L, 2L, 2L, Some(1.0))))
-    graft.Caches.releaseAll()
   }
 
   test("native winnowing rejects non-string input and bad params") {

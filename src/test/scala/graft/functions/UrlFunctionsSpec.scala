@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class UrlFunctionsSpec extends AnyFunSuite {
+class UrlFunctionsSpec extends AnyFunSuite with graft.CachesScoped {
   val spark = TestSpark.spark
   import spark.implicits._
 
@@ -64,6 +64,5 @@ class UrlFunctionsSpec extends AnyFunSuite {
     val plan = UrlFunctions.capPerDomain(docs, "url", "doc_id", 2)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
-    graft.Caches.releaseAll()
   }
 }

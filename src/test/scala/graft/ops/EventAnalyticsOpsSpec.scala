@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-class EventAnalyticsOpsSpec extends AnyFunSuite {
+class EventAnalyticsOpsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -81,7 +81,6 @@ class EventAnalyticsOpsSpec extends AnyFunSuite {
       ("2024-01-01", 1L, 1L, 1.0),
       ("2024-01-02", 1L, 2L, 0.5),
       ("2024-01-05", 2L, 3L, 0.666667)))
-    graft.Caches.releaseAll()
   }
 
   test("funnel leaves no persisted blocks behind") {

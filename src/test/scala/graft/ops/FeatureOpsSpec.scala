@@ -10,7 +10,7 @@ import graft.TestSpark
   * pct_change yields null on each entity's first row, keep-last dedup is
   * deterministic given a total sequence order.
   */
-class FeatureOpsSpec extends AnyFunSuite {
+class FeatureOpsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -109,7 +109,6 @@ class FeatureOpsSpec extends AnyFunSuite {
       ("2024-01-02", 20.0, true),
       ("2024-01-03", 30.0, true),
       ("2024-01-04", 40.0, false)))
-    graft.Caches.releaseAll()
   }
 
   test("interpolateBusinessDays: weekend-aware deltas and edge gaps") {
@@ -133,7 +132,6 @@ class FeatureOpsSpec extends AnyFunSuite {
       ("A", "2024-01-09", 40.0, false),
       ("B", "2024-01-04", 7.0, false),
       ("B", "2024-01-05", 7.0, true))) // trailing gap: previous value
-    graft.Caches.releaseAll()
   }
 
   test("gapFillBusinessDays keeps weekend observations and fills from them") {

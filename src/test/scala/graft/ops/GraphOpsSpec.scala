@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-class GraphOpsSpec extends AnyFunSuite {
+class GraphOpsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -52,7 +52,6 @@ class GraphOpsSpec extends AnyFunSuite {
     val out = GraphOps.pageRank(edges, "s", "d", iterations = 1)
       .select("node").as[Long].collect().toSet
     assert(out === Set(1L, 2L))
-    graft.Caches.releaseAll()
   }
 
   private def lpa(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
@@ -75,7 +74,6 @@ class GraphOpsSpec extends AnyFunSuite {
     val out = lpa(e, 3)
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L))
-    graft.Caches.releaseAll()
   }
 
   test("labelPropagation: mode argmax equals brute-force sync LPA on a random graph") {
@@ -97,7 +95,6 @@ class GraphOpsSpec extends AnyFunSuite {
       }
     }
     assert(lpa(edges, iters) === ref)
-    graft.Caches.releaseAll()
   }
 
   private def core(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] =
@@ -141,7 +138,6 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(r === Map(1L -> ((inv, 0.0)), 2L -> ((inv, 0.0)),
       3L -> ((0.0, 1.0))))
     assert(hitsMap(Seq((1L, 3L), (2L, 3L)), 3) === r, "fixed point")
-    graft.Caches.releaseAll()
   }
 
   test("hits: star hub dominates; authority splits over in-degree") {
@@ -156,7 +152,6 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(r(1L) === ((r6(hrRaw1 / nrm), 0.0)))
     assert(r(4L) === ((r6(a2 / nrm), 0.0)))
     assert(r(1L)._1 > r(4L)._1, "the two-authority hub outranks")
-    graft.Caches.releaseAll()
   }
 
   test("hits: duplicate edges and self-loops drop; nulls no phantom nodes") {
@@ -169,7 +164,6 @@ class GraphOpsSpec extends AnyFunSuite {
     val inv = r6(1.0 / math.sqrt(2))
     assert(out === Map(1L -> ((inv, 0.0)), 2L -> ((inv, 0.0)),
       3L -> ((0.0, 1.0))))
-    graft.Caches.releaseAll()
   }
 
   private def tris(edges: Seq[(Long, Long)]): Map[Long, (Long, Long, Double)] =
@@ -181,7 +175,6 @@ class GraphOpsSpec extends AnyFunSuite {
     val out = tris(Seq((1L, 2L), (2L, 3L), (3L, 1L)))
     assert(out === Map(1L -> ((2L, 1L, 1.0)), 2L -> ((2L, 1L, 1.0)),
       3L -> ((2L, 1L, 1.0))))
-    graft.Caches.releaseAll()
   }
 
   test("triangleCounts: K4 — each node in C(3,2)=3 triangles, clustering 1.0") {
@@ -189,14 +182,12 @@ class GraphOpsSpec extends AnyFunSuite {
     val e = for (a <- nodes; b <- nodes if a < b) yield (a, b)
     val out = tris(e)
     assert(out.values.toSet === Set((3L, 3L, 1.0)))
-    graft.Caches.releaseAll()
   }
 
   test("triangleCounts: path has zero triangles; deg-1 clustering is 0") {
     val out = tris(Seq((1L, 2L), (2L, 3L)))
     assert(out === Map(1L -> ((1L, 0L, 0.0)), 2L -> ((2L, 0L, 0.0)),
       3L -> ((1L, 0L, 0.0))))
-    graft.Caches.releaseAll()
   }
 
   test("triangleCounts: duplicate/reversed edges and self-loops collapse") {
@@ -205,7 +196,6 @@ class GraphOpsSpec extends AnyFunSuite {
       (1L, 3L), (1L, 1L)))
     assert(out === Map(1L -> ((2L, 1L, 1.0)), 2L -> ((2L, 1L, 1.0)),
       3L -> ((2L, 1L, 1.0))))
-    graft.Caches.releaseAll()
   }
 
   test("triangleCounts: bowtie — the hinge sits in 2 triangles, coeff 1/3") {
@@ -214,7 +204,6 @@ class GraphOpsSpec extends AnyFunSuite {
       (3L, 4L), (4L, 5L), (5L, 3L)))
     assert(out(3L) === ((4L, 2L, 0.333333)))
     assert(out(1L) === ((2L, 1L, 1.0)) && out(5L) === ((2L, 1L, 1.0)))
-    graft.Caches.releaseAll()
   }
 
   test("personalizedPageRank: teleport mass stays on the seed side") {
@@ -238,7 +227,6 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(r(2L) === r2Round2)
     assert(r(3L) === r6(0.85 * r2Round2), s"got ${r(3L)}, expected chain value")
     assert(r3Round2 > r(3L)) // transient round-2 spike decays
-    graft.Caches.releaseAll()
   }
 
   test("personalizedPageRank: uniform seeds over ALL nodes ≈ pageRank") {
@@ -251,7 +239,6 @@ class GraphOpsSpec extends AnyFunSuite {
         seeds = Seq(1L, 2L, 3L), iterations = 5)
       .as[(Long, Double)].collect().toMap
     assert(ppr === pr)
-    graft.Caches.releaseAll()
   }
 
   test("neighborJaccard: triangle, path, and duplicate collapse by hand") {
@@ -269,7 +256,6 @@ class GraphOpsSpec extends AnyFunSuite {
     // duplicate + reversed edges collapse to one undirected edge
     val dup = Seq((1L, 2L), (2L, 1L), (1L, 2L)).toDF("s", "d")
     assert(GraphOps.neighborJaccard(dup, "s", "d").count() === 1L)
-    graft.Caches.releaseAll()
   }
 
   test("degreeAssortativity: star is perfectly disassortative (-1)") {
@@ -302,10 +288,8 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("round-scoped pins release; only the final frame stays (tracked)") {
-    graft.Caches.releaseAll()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    ranks(Seq((1L, 2L), (2L, 3L), (3L, 1L)), 4)
-    graft.Caches.releaseAll()
+    graft.Caches.scoped(ranks(Seq((1L, 2L), (2L, 3L), (3L, 1L)), 4))
     val deadline = System.nanoTime() + 5e9.toLong
     while (spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty
            && System.nanoTime() < deadline) Thread.sleep(50)
@@ -325,7 +309,6 @@ class GraphOpsSpec extends AnyFunSuite {
     // no scored pair may be an existing edge
     val es = Set((1L, 2L), (2L, 3L), (1L, 4L), (2L, 4L), (3L, 4L))
     assert(out.forall { case (u, v, _, _) => !es.contains((u, v)) })
-    graft.Caches.releaseAll()
   }
 
   test("harmonicCentralitySampled: path graph, exact sixths, multi-seed mean") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class SkewOpsSpec extends AnyFunSuite {
+class SkewOpsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -101,7 +101,6 @@ class SkewOpsSpec extends AnyFunSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq.sorted
     assert(plain.size === (40 * 39) / 2, "identical docs must all pair up")
     assert(armed === plain)
-    graft.Caches.releaseAll()
   }
 
   test("keySkewProfile: exact one-row stats on the planted hot key") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.{col, to_date}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class ValidationOpsSpec extends AnyFunSuite {
+class ValidationOpsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -107,7 +107,6 @@ class ValidationOpsSpec extends AnyFunSuite {
         "ticker", "close", k = 5.0)
       .as[(String, Long, Double, Double, Long)].collect().toList
     assert(out === List(("A", 10L, 5.5, 2.5, 1L), ("B", 3L, 2.0, 0.0, 0L)))
-    graft.Caches.releaseAll()
   }
 
   test("cusumDrift: hand-run two-sided recursion, alarms at h = 1σ") {

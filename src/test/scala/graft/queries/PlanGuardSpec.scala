@@ -22,7 +22,7 @@ import graft.TestSpark
   * aggregate of the data" does NOT qualify (entity-cardinality frames
   * grow with the data; that's what the r12 rewrites removed).
   */
-class PlanGuardSpec extends AnyFunSuite {
+class PlanGuardSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -56,7 +56,9 @@ class PlanGuardSpec extends AnyFunSuite {
     val errors = Seq.newBuilder[String]
     for (q <- Queries.registry) {
       try {
-        val plan = q.run(spark, sf).queryExecution.optimizedPlan
+        // one scope per query: its pins are released before the next
+        // query's plan is resolved
+        val plan = graft.Caches.scoped(q.run(spark, sf).queryExecution.optimizedPlan)
         val globalWindows = plan.collectWithSubqueries {
           case w: LWindow if w.partitionSpec.isEmpty => w
         }
@@ -64,10 +66,7 @@ class PlanGuardSpec extends AnyFunSuite {
           offenders += s"${q.name} (${globalWindows.size} unpartitioned Window node(s))"
       } catch {
         case e: Throwable => errors += s"${q.name}: ${e.getMessage}"
-      } finally {
-        graft.Caches.releaseAll()
-        spark.catalog.clearCache()
-      }
+      } finally spark.catalog.clearCache()
     }
     val errs = errors.result()
     assert(errs.isEmpty, s"plan construction failed:\n${errs.mkString("\n")}")

@@ -3,7 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
   private val sf = "/root/testdata/sf0.001"
@@ -121,22 +121,24 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("mix1 tokenizes the corpus exactly once (one BpeEncode site behind the pinned cells)") {
-    graft.Caches.releaseAll()
-    // building the query runs BPE training eagerly (8 bounded-collect
-    // merge rounds — the train cost, not tokenization); the RETURNED
-    // plan is the accounting query, whose corpus tokenization must be
-    // a single BpeEncode site inside the pinned per-cell aggregate —
-    // the budget cells and the global total both read that cache, so
-    // the corpus encodes exactly once per run.
-    val df = Queries.byName("mix1_token_accounting")(spark, sf)
-    // a pinned frame read from TWO scan sites is still ONE compute
-    val sites = graft.PlanFragments.nodes(df.queryExecution.executedPlan)
-      .count(_.expressions.exists(
-        _.find(_.isInstanceOf[graft.functions.BpeEncode]).isDefined))
-    assert(sites === 1,
-      s"expected exactly one corpus-encode site, found $sites:\n" +
-        df.queryExecution.executedPlan)
-    graft.Caches.releaseAll()
+    // its own scope: the query's pins are the only cached frames its
+    // plan can read, and they are released when the assertion is done
+    graft.Caches.scoped {
+      // building the query runs BPE training eagerly (8 bounded-collect
+      // merge rounds — the train cost, not tokenization); the RETURNED
+      // plan is the accounting query, whose corpus tokenization must be
+      // a single BpeEncode site inside the pinned per-cell aggregate —
+      // the budget cells and the global total both read that cache, so
+      // the corpus encodes exactly once per run.
+      val df = Queries.byName("mix1_token_accounting")(spark, sf)
+      // a pinned frame read from TWO scan sites is still ONE compute
+      val sites = graft.PlanFragments.nodes(df.queryExecution.executedPlan)
+        .count(_.expressions.exists(
+          _.find(_.isInstanceOf[graft.functions.BpeEncode]).isDefined))
+      assert(sites === 1,
+        s"expected exactly one corpus-encode site, found $sites:\n" +
+          df.queryExecution.executedPlan)
+    }
   }
 
   test("j9_star_join plans broadcast joins for the dimension chain") {
@@ -158,6 +160,5 @@ class QueriesSpec extends AnyFunSuite {
       assert(b._4 <= a._4)
     }
     assert(rows.last._2 < rows.head._2, "8 merges must actually compress this corpus")
-    graft.Caches.releaseAll()
   }
 }

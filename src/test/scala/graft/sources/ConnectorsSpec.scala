@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.model.Schemas
 
-class ConnectorsSpec extends AnyFunSuite {
+class ConnectorsSpec extends AnyFunSuite with graft.CachesScoped {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -70,7 +70,6 @@ class ConnectorsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       JsonlCorpus.read(spark, f.toString, schema.add(JsonlCorpus.corruptCol, StringType))
     }
-    graft.Caches.releaseAll()
   }
 
   test("full ingest chain: fetch -> standardize -> assert -> metadata -> range") {
